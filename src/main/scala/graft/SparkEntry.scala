@@ -298,7 +298,7 @@ object SparkEntry {
 
     // flagship span-document validation (input_hint schema): generated
     // deterministic table + media catalog (STAGED for the oracle), full
-    // validation pass (contract via the SpanCheck fast path + uniqueness
+    // validation pass (contract via the codegen'd verdict + uniqueness
     // + referential), per-check violation counts — the DuckDB oracle
     // replays the whole rule over the staged parquet.
     "span_validate" -> ((s, dir) => {

@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions._
   *
   * The span-sequence invariant (offsets strictly increasing; validation
   * never reorders/mutates spans) rides on a pred over the array column
-  * using `aggregate` — one linear pass per row, codegen'd.
+  * using `aggregate` — one linear pass per row, codegen'd by the verdict
+  * compiler ([[graft.functions.ArrayFold]]).
   */
 object SpanDocs {
 
@@ -62,68 +63,11 @@ object SpanDocs {
       C.array(C.or(textSpan, mediaSpan)),
       C.pred("strictly increasing offsets")(monotoneOffsets)))
 
-  /** first-violation expression using the codegen'd
-    * [[graft.functions.SpanCheck]] fast path for the spans field (hot
-    * loop decides pass/fail; failures delegate to the generic compiler
-    * for bit-identical payloads) — falls back to the fully generic
-    * compile when the physical span shape differs. */
-  def fastFirstViolation(df: DataFrame, thing: String = "docs"): Column = {
-    import graft.contracts.Compiler.viol
-    val spanDt = df.schema("spans").dataType
-    implicit val env: MsgEnv = MsgEnv(thing, contract)
-    if (!graft.functions.SpanCheck.matches(spanDt))
-      // non-flagship span shapes: generic codegen verdict compiler
-      Validate.fastFirstViolation(df, contract, thing)
-    else graft.contracts.CompileCache.memo(
-      // pure function of (schema, thing): SpanCheck.check re-analyzes
-      // the generic slow-path tree per call — memoized like the
-      // rowFirstViolation compile (CompileCache scaladoc; the contract
-      // is the fixed [[contract]] val) and constant-folded once
-      // (foldedColumn below) so per-query Catalyst passes don't re-walk
-      // the docIdViol/rowRender message scaffolding
-      ("spanFastViol", org.apache.spark.sql.types.StructType(
-        df.schema.fields), thing)) {
-      graft.contracts.CompileCache.foldedColumn(df.sparkSession,
-        org.apache.spark.sql.types.StructType(df.schema.fields), {
-      // frames must match what Validate's row-level compile would build
-      // (the fast path's slow-path payloads are compared bit-for-bit)
-      val rowRender = graft.contracts.Compiler.render(
-        org.apache.spark.sql.types.StructType(df.schema.fields),
-        struct(df.columns.toSeq.map(col): _*))
-      val docIdViol = {
-        val dt = df.schema("doc_id").dataType
-        graft.contracts.Compiler.objectViols(
-          C.obj("doc_id" -> contract.fields("doc_id")),
-          org.apache.spark.sql.types.StructType(df.schema.fields)
-            .apply(Set("doc_id")).asInstanceOf[org.apache.spark.sql.types.StructType],
-          _ => col("doc_id"), Frame.root, rowRender)
-      }
-      val spansViol =
-        when(col("spans").isNull,
-          viol(Frame(lit(".spans"), lit(""), lit("")),
-            lit("Field `spans`"), lit("null"), "r",
-            concat(lit("Field `spans` required, got "), rowRender)))
-          .otherwise(graft.functions.SpanCheck.check(df, "spans",
-            contract.fields("spans"), thing))
-      coalesce(docIdViol, spansViol)
-      })
-    }
-  }
-
-  /** violations via the fast path, same shape as Validate.violations. */
-  def violationsFast(docs: DataFrame, thing: String = "docs"): DataFrame = {
-    implicit val env: MsgEnv = MsgEnv(thing, contract)
-    val v = fastFirstViolation(docs, thing)
-    docs.withColumn("_v", v)
-      .where(col("_v").isNotNull)
-      .select(
-        col("doc_id").cast("string").as("doc_id"),
-        col("_v.path").as("path"),
-        col("_v.expected").as("expected"),
-        col("_v.got").as("got"),
-        lit(contract.render).as("contract_repr"),
-        graft.contracts.Compiler.assembleMessage(col("_v")).as("message"))
-  }
+  /** contract violations of a span table: [[Validate.violations]] on
+    * [[contract]] (the codegen'd verdict; failing rows delegate to the
+    * generic compile for their payloads). */
+  def violationsFast(docs: DataFrame, thing: String = "docs"): DataFrame =
+    Validate.violations(docs, contract, "doc_id", thing)
 
   /** end-to-end validation of a span table: contract violations +
     * doc_id uniqueness + media_ref referential check, all in the

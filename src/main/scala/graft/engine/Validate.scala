@@ -37,8 +37,9 @@ object Validate {
   /** Row-level validation of a DataFrame against an object contract whose
     * fields bind to top-level columns. `thing` is the check name appearing
     * in messages (the `name` arg of `check`, contract.impl.js:265).
-    * This is the GENERIC compile — the semantic reference; hot paths use
-    * [[fastFirstViolation]] (same output, property-asserted). */
+    * This is the GENERIC compile — the semantic reference that
+    * [[fastFirstViolation]] is property-tested against; it also builds
+    * the payloads of the rows [[fastFirstViolation]] fails. */
   def firstViolation(df: DataFrame, contract: ObjectC,
                      thing: String = "data",
                      withFullValue: Boolean = false): Column = {
@@ -48,10 +49,11 @@ object Validate {
   }
 
   /** first violation through the codegen'd verdict compiler
-    * (graft.functions.ContractCheck): pass/fail decided by a generated
-    * primitive loop (no HOF interpretation — measured 2.3x over the
-    * generic compile on the flagship shape), failing rows delegate to
-    * the generic expression for bit-identical payloads. */
+    * (graft.functions.ContractCheck) — the default evaluation path for
+    * every contract: pass/fail decided by generated code (shapes as
+    * primitive loops, `aggregate` preds as generated folds, anchored
+    * ASCII regexes on bytes, no HOF interpretation), failing rows
+    * delegate to the generic expression for bit-identical payloads. */
   def fastFirstViolation(df: DataFrame, contract: ObjectC,
                          thing: String = "data"): Column =
     graft.functions.ContractCheck.rowFirstViolation(df, contract, thing)

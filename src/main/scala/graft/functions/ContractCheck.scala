@@ -9,9 +9,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGe
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.types._
 
-/** Codegen'd first-violation check for an ARBITRARY contract — the
-  * generalization of the round-1 flagship-only SpanCheck fast path to
-  * every contract/schema pair.
+/** Codegen'd first-violation check for an ARBITRARY contract: the one
+  * contract-evaluation path, for every contract/schema pair (the
+  * flagship span contract included).
   *
   * Two halves, parity by construction:
   *  - the HOT loop only decides pass/fail: `plan` (a

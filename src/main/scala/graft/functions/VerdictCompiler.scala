@@ -3,7 +3,7 @@ package graft.functions
 import graft.contracts._
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, BoundReference, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Alias, ArrayAggregate, AttributeReference, BoundReference, Expression, Literal, RLike}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions.col
@@ -22,9 +22,11 @@ import org.apache.spark.sql.types._
   * for EVERY contract: shapes become primitive `for` loops over
   * ArrayData/InternalRow, scalar leaves inline the SAME fail conditions
   * the generic compiler uses ([[Compiler.leafFail]] — single source of
-  * truth), and only leaves whose condition genuinely cannot be
-  * code-generated (e.g. a pred built from HOF folds) fall back to an
-  * embedded interpreted eval. Violation payloads are NOT built here: on
+  * truth), `aggregate` folds bind as generated loops ([[ArrayFold]])
+  * and anchored ASCII regexes as byte loops ([[AsciiRegex]]), and only
+  * leaves whose condition genuinely cannot be code-generated
+  * (e.g. a pred built from `transform`) fall back to an embedded
+  * interpreted eval. Violation payloads are NOT built here: on
   * failure the caller delegates the row to the unchanged generic
   * expression, so payloads stay bit-identical (asserted by the
   * fast-vs-generic property test).
@@ -38,8 +40,9 @@ object VNode {
   case object FailAlways extends VNode
   /** scalar leaf: codegen-able fail condition bound to slot 0 */
   final case class Leaf(fail: Expression) extends VNode
-  /** fail condition containing CodegenFallback subtrees (HOF preds):
-    * evaluated interpreted against a one-slot row */
+  /** fail condition containing CodegenFallback subtrees (HOF preds
+    * other than code-generatable `aggregate` folds, which bind as
+    * [[ArrayFold]]): evaluated interpreted against a one-slot row */
   final case class Fallback(fail: Expression) extends VNode
   /** optional: null passes, else inner */
   final case class Opt(inner: VNode) extends VNode
@@ -252,6 +255,11 @@ object VerdictCompiler {
       // rewritten by the optimizer, which the probe bypasses)
       case rr: org.apache.spark.sql.catalyst.expressions.RuntimeReplaceable
         => rr.replacement
+    }.transformUp {
+      // `aggregate` folds (CodegenFallback in Spark) as generated loops;
+      // anchored ASCII regexes as byte loops
+      case agg: ArrayAggregate => ArrayFold.lower(agg).getOrElse(agg)
+      case r: RLike => AsciiRegex.lower(r).getOrElse(r)
     }
   }
 

@@ -570,12 +570,8 @@ object Similarity {
     * rankings stay structurally independent checks of each other. */
   private def rankTopK(cand: DataFrame, k: Int): DataFrame =
     cand.groupBy("id")
-      .agg((if (sys.env.get("GRAFT_TOPK_UDAF").contains("1"))
-          // A/B escape hatch: the pre-round-6 udaf(Aggregator) form
-          graft.functions.TopKNeighbors.topkUdaf(k)(
-            col("cosine"), col("neighbor"))
-        else graft.functions.TopKNeighbors.topk(k)(
-          col("cosine"), col("neighbor"))).as("top"))
+      .agg(graft.functions.TopKNeighbors.topk(k)(
+        col("cosine"), col("neighbor")).as("top"))
       .select(col("id"), posexplode(col("top")))
       .select(col("id"), (col("pos") + 1).as("rank"),
         col("col.neighbor").as("neighbor"), col("col.cosine").as("cosine"))

@@ -7,8 +7,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** micro-bench: flagship span validation through (a) the generic HOF
-  * compiler, (b) the hand-written SpanCheck fast path, (c) the generic
-  * codegen verdict compiler (ContractCheck). Interleaved min-of-3. */
+  * compiler, (b) the codegen verdict compiler (ContractCheck).
+  * Interleaved min-of-3. */
 object BenchCheck {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -27,18 +27,13 @@ object BenchCheck {
     }
     def generic() = docs.where(
       Validate.firstViolation(docs, SpanDocs.contract).isNotNull).count()
-    def fastSpan() = docs.where(
-      SpanDocs.fastFirstViolation(docs).isNotNull).count()
     def cc() = docs.where(ContractCheck.rowFirstViolation(docs,
       SpanDocs.contract, "docs").isNotNull).count()
-    // warm all three
-    generic(); fastSpan(); cc()
-    val results = (1 to 3).map { _ =>
-      (time(generic()), time(fastSpan()), time(cc()))
-    }
+    // warm both
+    generic(); cc()
+    val results = (1 to 3).map(_ => (time(generic()), time(cc())))
     val g = results.map(_._1).min
-    val s = results.map(_._2).min
-    val c = results.map(_._3).min
+    val c = results.map(_._2).min
     // wide-contract section: 350 leaves over 35 fields — past round 2's
     // 300-leaf guard, so this contract used to fall back to the generic
     // compile; now it stays on the method-split codegen verdict.
@@ -72,7 +67,7 @@ object BenchCheck {
       (time(genericWideDf.count()), time(ccWideDf.count())))
     val gw = wres.map(_._1).min
     val cw = wres.map(_._2).min
-    println(f"{\"generic_sec\":$g%.2f,\"spancheck_sec\":$s%.2f," +
+    println(f"{\"generic_sec\":$g%.2f," +
       f"\"contractcheck_sec\":$c%.2f,\"n\":$n," +
       f"\"wide350_generic_sec\":$gw%.2f," +
       f"\"wide350_contractcheck_sec\":$cw%.2f,\"n_wide\":$nWide}")

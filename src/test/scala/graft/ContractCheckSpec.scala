@@ -2,10 +2,12 @@ package graft
 
 import graft.contracts._
 import graft.engine.{SpanDocs, Validate}
-import graft.functions.ContractCheck
+import graft.functions.{ContractCheck, VNode, VerdictCompiler}
 import graft.gen.SpanGen
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Fast-vs-generic equivalence for the codegen'd verdict compiler
   * (graft.functions.{VerdictCompiler, ContractCheck}): for EVERY
@@ -17,20 +19,24 @@ class ContractCheckSpec extends SparkTestBase {
 
   /** row-by-row equality of the fast and generic first-violation.
     * Codegen is forced (CODEGEN_ONLY) so a fast path that silently
-    * fell back to interpretation would fail the test. */
+    * fell back to interpretation would fail the test; `interpreted`
+    * instead forces the interpreted verdict (no codegen at all). */
   private def assertEquivalent(df: DataFrame, c: ObjectC,
-                               expectSomeViol: Boolean = true): Unit = {
+                               expectSomeViol: Boolean = true,
+                               interpreted: Boolean = false): Unit = {
     val generic = df.select(Validate.firstViolation(df, c).as("v"))
       .collect()
-    val forced = spark.conf.getOption("spark.sql.codegen.factoryMode")
-    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    val forced =
+      if (interpreted) Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+      else Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val saved = forced.map { case (k, _) => k -> spark.conf.getOption(k) }
+    forced.foreach { case (k, v) => spark.conf.set(k, v) }
     val fast =
       try df.select(ContractCheck.rowFirstViolation(df, c).as("v"))
         .collect()
-      finally forced match {
-        case Some(m) => spark.conf.set("spark.sql.codegen.factoryMode", m)
-        case None => spark.conf.unset("spark.sql.codegen.factoryMode")
-      }
+      finally saved.foreach { case (k, v) =>
+        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     assert(generic.length == fast.length)
     generic.zip(fast).foreach { case (g, f) =>
       assert(g == f, s"fast-path divergence:\n  generic=$g\n  fast=$f")
@@ -40,11 +46,112 @@ class ContractCheckSpec extends SparkTestBase {
         "fixture should produce at least one violation")
   }
 
+  /** every node of a verdict program (leaf conditions not entered) */
+  private def vnodes(v: Any): Iterator[Any] = v match {
+    case _: Expression => Iterator.empty
+    case s: Iterable[_] => s.iterator.flatMap(vnodes)
+    case p: Product => Iterator(p) ++ p.productIterator.flatMap(vnodes)
+    case _ => Iterator.empty
+  }
+
+  private def fallbacks(c: ObjectC, df: DataFrame): List[Any] =
+    vnodes(VerdictCompiler.buildRow(c, StructType(df.schema.fields))(spark))
+      .collect { case f: VNode.Fallback => f }.toList
+
   test("codegen verdict ≡ generic on the span table (all defects)") {
     val docs = SpanGen.docs(spark, 4000, 8,
       defects = SpanGen.Defects(nullKind = true, badKind = true,
         textOnMedia = true, negOffset = true, badRef = true, rate = 50))
-    assertEquivalent(docs, SpanDocs.contract)
+    // offset-fold cases no planted defect reaches (negOffset fails
+    // `offset >= 0` before the fold runs)
+    val st = "struct<kind:string,text:string,media_ref:string,offset:int>"
+    def text(off: String) = "named_struct('kind','text','text','a'," +
+      s"'media_ref',cast(null as string),'offset',$off)"
+    def image(off: String) = "named_struct('kind','image'," +
+      s"'text',cast(null as string),'media_ref','media-1','offset',$off)"
+    val handBuilt = Seq(
+      "equal" -> s"array(${text("5")}, ${image("5")})",
+      "decreasing" -> s"array(${text("5")}, ${image("3")})",
+      "null-offset" -> s"array(${text("5")}, ${image("cast(null as int)")})",
+      "empty" -> s"cast(array() as array<$st>)",
+      "null-span" -> s"array(${text("5")}, cast(null as $st))")
+      .map { case (id, spans) => fix(s"'doc-$id' as doc_id, $spans as spans") }
+    val all = handBuilt.foldLeft(docs)(_ unionByName _)
+    assertEquivalent(all, SpanDocs.contract)
+    assertEquivalent(all, SpanDocs.contract, interpreted = true)
+  }
+
+  test("flagship span contract compiles with no interpreted leaf " +
+       "(the offset fold is generated code)") {
+    val docs = SpanGen.docs(spark, 10, 1)
+    val fb = fallbacks(SpanDocs.contract, docs)
+    assert(fb.isEmpty, s"interpreted leaves: $fb")
+  }
+
+  test("verdict codegen is the same source on every plan (the fold's " +
+       "variables are not named by a global counter)") {
+    // a source that differs per execution misses Spark's compiled-class
+    // cache: every query recompiles and re-warms the JIT
+    // cached: the generator's own `transform` would keep the filter out
+    // of whole-stage codegen
+    val docs = SpanGen.docs(spark, 10, 1).cache()
+    def source() = org.apache.spark.sql.execution.debug.codegenStringSeq(
+      docs.where(ContractCheck.rowFirstViolation(docs, SpanDocs.contract)
+        .isNotNull).queryExecution.executedPlan).map(_._2)
+    val first = source()
+    assert(first.exists(_.contains("lambda_variable")))
+    assert(first == source())
+    docs.unpersist()
+  }
+
+  test("anchored ASCII regexes decided on bytes ≡ java.util.regex find") {
+    import graft.functions.AsciiRegex
+    import org.apache.spark.unsafe.types.UTF8String
+    // subjects: random strings over ASCII, Java's line terminators,
+    // non-ASCII characters and malformed UTF-8
+    val pieces: Seq[Array[Byte]] = Seq("a", "b", "c", "x", "-", "0", "9",
+        "media-", "doc-", ".", "$", "A", ":", "\r", "\n", "\u0085", "\u2028",
+        "\u2029", "é").map(_.getBytes("UTF-8")) ++
+      Seq(Array(0xc2.toByte), Array(0x85.toByte),
+        Array(0xe2.toByte, 0x80.toByte))
+    val rnd = new scala.util.Random(7)
+    val subjects = Seq("", "media-12", "media-12\n", "media-12\r\n",
+        "media-1\u2028", "media-1\n\n", "doc-1").map(_.getBytes("UTF-8")) ++
+      Seq.fill(3000)(Array.fill(rnd.nextInt(6) + 1)(
+        pieces(rnd.nextInt(pieces.size))).flatten)
+    Seq("^media-[0-9]+$", "^doc-", "^x+$", "^a", "^$", "^ab+$", "^a+b",
+        "^[A-Z_a-z]+:[0-9]+$").foreach { p =>
+      val re = AsciiRegex.parse(p).getOrElse(fail(s"$p should parse"))
+      val jre = java.util.regex.Pattern.compile(p)
+      subjects.foreach { b =>
+        val s = UTF8String.fromBytes(b)
+        assert(re.matches(s) == jre.matcher(s.toString).find(0),
+          s"$p on bytes ${b.mkString(",")}")
+      }
+    }
+    // out of the subset, or a `+` run overlapping the next atom (greedy
+    // matching would not be exact)
+    Seq("media", "^[^0-9]", "^\\d", "^\\.", "^a{2}", "^a*", "^a?", "^a++",
+        "^a+?", "^(a)", "^.", "^é", "^a$b", "^[]", "^[a-]", "^a+a$",
+        "^[a-c]+b$").foreach(p => assert(AsciiRegex.parse(p).isEmpty, p))
+  }
+
+  test("aggregate preds: code-generatable folds bind as code, a fold " +
+       "over `transform` stays an interpreted Fallback; both ≡ generic") {
+    val df = Seq("array(1L, 2L)", "array(3L, 4L)", "array()",
+        "cast(null as array<bigint>)", "array(1L, cast(null as bigint))")
+      .map(xs => fix(s"cast($xs as array<bigint>) as xs"))
+      .reduce(_ unionByName _)
+    val sum = C.obj("xs" -> C.pred("sum below 5")(xs =>
+      aggregate(xs, lit(0L), (acc, x) => acc + x) < 5))
+    assert(fallbacks(sum, df).isEmpty)
+    assertEquivalent(df, sum)
+    assertEquivalent(df, sum, interpreted = true)
+    val doubled = C.obj("xs" -> C.pred("doubled sum below 10")(xs =>
+      aggregate(xs, lit(0L), (acc, x) =>
+        acc + element_at(transform(array(x), y => y * 2), 1)) < 10))
+    assert(fallbacks(doubled, df).nonEmpty)
+    assertEquivalent(df, doubled)
   }
 
   test("codegen verdict ≡ generic on the documents policy contract") {

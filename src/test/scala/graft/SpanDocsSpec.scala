@@ -3,6 +3,7 @@ package graft
 import graft.contracts._
 import graft.engine._
 import graft.gen.SpanGen
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end span-table goldens (FIXTURES.md §1): deterministic
@@ -140,13 +141,27 @@ class SpanDocsSpec extends SparkTestBase {
     assert(v.get.getAs[String]("expected") == "strictly increasing offsets")
   }
 
-  test("SpanCheck fast path ≡ generic compile on defect-planted data") {
+  /** violations straight from the generic compile
+    * (`Validate.firstViolation`), in the six columns of
+    * `Validate.violations` — an independent reference for the codegen'd
+    * verdict that `violationsFast` runs. */
+  private def genericViolations(docs: DataFrame): DataFrame = {
+    implicit val env: MsgEnv = MsgEnv("docs", SpanDocs.contract)
+    docs.withColumn("_v",
+        Validate.firstViolation(docs, SpanDocs.contract, "docs"))
+      .where(col("_v").isNotNull)
+      .select(col("doc_id").cast("string").as("doc_id"),
+        col("_v.path").as("path"), col("_v.expected").as("expected"),
+        col("_v.got").as("got"),
+        lit(SpanDocs.contract.render).as("contract_repr"),
+        Compiler.assembleMessage(col("_v")).as("message"))
+  }
+
+  test("flagship violations ≡ generic compile on defect-planted data") {
     val docs = SpanGen.docs(spark, 4000, 8,
       defects = SpanGen.Defects(nullKind = true, badKind = true,
         textOnMedia = true, negOffset = true, badRef = true, rate = 50))
-    val generic = Validate
-      .violations(docs, SpanDocs.contract, "doc_id", "docs")
-      .orderBy("doc_id").collect()
+    val generic = genericViolations(docs).orderBy("doc_id").collect()
     val fast = SpanDocs.violationsFast(docs)
       .orderBy("doc_id").collect()
     assert(generic.length == fast.length && generic.length > 0)
@@ -161,7 +176,8 @@ class SpanDocsSpec extends SparkTestBase {
         |  'media_ref','media-1','offset',3)) as spans""".stripMargin)
     val gv = nm.select(Validate.firstViolation(nm, SpanDocs.contract)
       .as("v")).collect()(0)
-    val fv = nm.select(SpanDocs.fastFirstViolation(nm).as("v"))
+    val fv = nm.select(
+      Validate.fastFirstViolation(nm, SpanDocs.contract, "docs").as("v"))
       .collect()(0)
     assert(gv == fv)
   }
@@ -171,9 +187,7 @@ class SpanDocsSpec extends SparkTestBase {
     // find() would wrongly accept them — guard both compile paths
     val docs = SpanGen.docs(spark, 3000, 4,
       defects = SpanGen.Defects(badRef = true, rate = 50))
-    val generic = Validate
-      .violations(docs, SpanDocs.contract, "doc_id", "docs")
-      .orderBy("doc_id").collect()
+    val generic = genericViolations(docs).orderBy("doc_id").collect()
     val fast = SpanDocs.violationsFast(docs).orderBy("doc_id").collect()
     assert(generic.nonEmpty, "planted bad refs must violate generically")
     assert(generic.length == fast.length)
