@@ -73,18 +73,26 @@ case class ArrayFold(argument: Expression, zero: Expression,
       merges.map(ArrayFold.rebind(_, elem -> elemV).genCode(ctx))
     val finishCode = fin.genCode(ctx)
     // ArrayAggregate stores InternalRow.copyValue(merge result), which
-    // copies a struct field by field
-    def store(from: Seq[ExprCode], copy: Boolean): String =
-      vars.zip(varCodes).zip(from).map { case ((v, c), e) =>
+    // copies a struct field by field. Every result is staged in a local
+    // before any variable is written: a result may be the variable of
+    // another accumulator field itself (`named_struct('a', acc.b, ...)`)
+    def store(from: Seq[ExprCode], copy: Boolean): String = {
+      val staged = vars.zip(from).map { case (v, e) =>
         val jt = CodeGenerator.javaType(v.dataType)
-        val value =
+        val (isNull, value) = (ctx.freshName("isNull"), ctx.freshName("value"))
+        val copied =
           if (!copy || CodeGenerator.isPrimitiveType(v.dataType)) s"${e.value}"
           else s"($jt) org.apache.spark.sql.catalyst.InternalRow" +
             s".copyValue(${e.value})"
-        s"""${c.isNull} = ${e.isNull};
-           |${c.value} = ${e.isNull} ?
-           |  ${CodeGenerator.defaultValue(v.dataType)} : $value;""".stripMargin
-      }.mkString("\n")
+        (s"""boolean $isNull = ${e.isNull};
+            |$jt $value = $isNull ?
+            |  ${CodeGenerator.defaultValue(v.dataType)} : $copied;""".stripMargin,
+          isNull, value)
+      }
+      (staged.map(_._1) ++ varCodes.zip(staged).map { case (c, (_, n, v)) =>
+        s"${c.isNull} = $n;\n${c.value} = $v;"
+      }).mkString("\n")
+    }
     val arr = ctx.freshName("foldArr"); val i = ctx.freshName("i")
     val et = elem.dataType
     val setElem =

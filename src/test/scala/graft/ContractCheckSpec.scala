@@ -20,10 +20,14 @@ class ContractCheckSpec extends SparkTestBase {
   /** row-by-row equality of the fast and generic first-violation.
     * Codegen is forced (CODEGEN_ONLY) so a fast path that silently
     * fell back to interpretation would fail the test; `interpreted`
-    * instead forces the interpreted verdict (no codegen at all). */
-  private def assertEquivalent(df: DataFrame, c: ObjectC,
+    * instead forces the interpreted verdict (no codegen at all). `df`
+    * is cached first: over literal rows (`fix`) the optimizer would
+    * fold the verdict to a constant with interpreted eval, and the
+    * generated code would never run. */
+  private def assertEquivalent(data: DataFrame, c: ObjectC,
                                expectSomeViol: Boolean = true,
                                interpreted: Boolean = false): Unit = {
+    val df = data.cache()
     val generic = df.select(Validate.firstViolation(df, c).as("v"))
       .collect()
     val forced =
@@ -44,6 +48,7 @@ class ContractCheckSpec extends SparkTestBase {
     if (expectSomeViol)
       assert(generic.exists(!_.isNullAt(0)),
         "fixture should produce at least one violation")
+    df.unpersist()
   }
 
   /** every node of a verdict program (leaf conditions not entered) */
@@ -152,6 +157,24 @@ class ContractCheckSpec extends SparkTestBase {
         acc + element_at(transform(array(x), y => y * 2), 1)) < 10))
     assert(fallbacks(doubled, df).nonEmpty)
     assertEquivalent(df, doubled)
+    // struct accumulators whose fields read each other's previous value:
+    // every field must see the accumulator before this element (reading
+    // a field already updated would pass [9, 1] and [1, 2])
+    val window = C.obj("xs" -> C.pred("last two sum below 6")(xs =>
+      aggregate(xs, struct(lit(0L).as("cur"), lit(0L).as("prev")),
+        (acc, x) => struct(x.as("cur"), acc.getField("cur").as("prev")),
+        acc => acc.getField("cur") + acc.getField("prev") < 6)))
+    val swap = C.obj("xs" -> C.pred("odd length")(xs =>
+      aggregate(xs, struct(lit(0L).as("a"), lit(10L).as("b")),
+        (acc, _) => struct(acc.getField("b").as("a"),
+          acc.getField("a").as("b")),
+        acc => acc.getField("a") > 5)))
+    val pairs = df.unionByName(fix("cast(array(9L, 1L) as array<bigint>) as xs"))
+    Seq(window, swap).foreach { c =>
+      assert(fallbacks(c, pairs).isEmpty)
+      assertEquivalent(pairs, c)
+      assertEquivalent(pairs, c, interpreted = true)
+    }
   }
 
   test("codegen verdict ≡ generic on the documents policy contract") {
