@@ -53,6 +53,11 @@ object CompileCache {
   /** memoize `build` under `key` (bounded LRU — an evicted entry only
     * re-pays one compile).
     *
+    * `build` runs outside the lock, so a compile of hundreds of ms
+    * blocks no other session and may itself call `memo`. Threads that
+    * miss the same key may both build; every caller gets the first one
+    * published, which is sound because a build is deterministic.
+    *
     * The cache is process-wide while keys carry no session identity:
     * artifacts built under one session's SQLConf are served to every
     * session in the JVM. That is sound for the contract trees cached
@@ -62,7 +67,10 @@ object CompileCache {
     * timezones, ANSI-dependent arithmetic) must add the relevant conf
     * to its key. */
   def memo[A <: AnyRef](key: Any)(build: => A): A =
-    m.computeIfAbsent(key, _ => build).asInstanceOf[A]
+    Option(m.get(key)).getOrElse {
+      val built = build
+      Option(m.putIfAbsent(key, built)).getOrElse(built)
+    }.asInstanceOf[A]
 
   /** tests/diagnostics. */
   def size: Int = m.size

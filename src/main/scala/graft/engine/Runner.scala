@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * `run` discovers input partitions (directory-partitioned by `part`),
   * skips those already in the manifest for the current snapshot, and for
   * each pending partition: validates (contract + uniqueness-within-
-  * partition + referential), writes violations + summary to
-  * per-partition output dirs, appends the manifest row. Partition
+  * partition + referential), writes its violations to a per-partition
+  * output dir, appends the manifest row. Partition
   * pruning makes each per-partition pass scan only its own files
   * (`.where(col("part") === k)` on a directory-partitioned table).
   * `maxParts` caps how many partitions one invocation processes — the

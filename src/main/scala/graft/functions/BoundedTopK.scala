@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Aggregator
 /** Shared k-bounded sorted-buffer Aggregator: the single audited
   * implementation of insert-into-sorted-prefix and bounded sorted
   * merge behind every window-replacing ranking aggregate
-  * ([[TopKNeighbors]], [[TopKTerms]],
-  * [[graft.engine.FirstKViolations]]).
+  * ([[TopKTerms]], [[graft.engine.FirstKViolations]], and the
+  * neighbor-ranking semantics twin in the tests).
   *
   * Subclasses provide the TOTAL order (`cmp < 0` iff `a` outranks
   * `b`) and the encoders; the buffer invariant — ascending by `cmp`,

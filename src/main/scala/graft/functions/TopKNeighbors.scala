@@ -1,12 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.functions.udaf
-
-/** One scored candidate neighbor. `cosine` is Option so a null score
-  * (null input vector upstream) keeps the window semantics it replaces:
-  * `desc_nulls_last` — nulls rank after every number including NaN. */
-case class ScoredNeighbor(cosine: Option[Double], neighbor: Long)
+import org.apache.spark.sql.Column
 
 /** Bounded top-k by (score desc, neighbor asc) — the shuffle-shrinking
   * replacement for `row_number().over(partitionBy(id).orderBy(desc))`
@@ -15,12 +9,11 @@ case class ScoredNeighbor(cosine: Option[Double], neighbor: Long)
   * Why: a rank window must shuffle EVERY candidate row to the query's
   * reducer and sort there — at the IVF/LSH defaults that is
   * ~nProbe·n/nCentroids (hundreds to thousands) rows per query id.
-  * This Aggregator runs as an ObjectHashAggregate with map-side
-  * partial aggregation: each map task keeps at most k rows per query
-  * id in a sorted bound buffer, so the exchange carries ≤ k rows per
-  * (id, map task) instead of the whole candidate set — the same
-  * ~k/bucketSize reduction the sketch aggregations in
-  * [[graft.engine.Drift]] get, applied to ranking.
+  * The aggregate runs with map-side partial aggregation: each map task
+  * keeps at most k rows per query id in a sorted bound buffer, so the
+  * exchange carries ≤ k rows per (id, map task) instead of the whole
+  * candidate set — the same ~k/bucketSize reduction the sketch
+  * aggregations in [[graft.engine.Drift]] get, applied to ranking.
   *
   * Total order replicated EXACTLY from the window it replaces
   * (`orderBy(col(score).desc, col(neighbor).asc)`):
@@ -28,58 +21,25 @@ case class ScoredNeighbor(cosine: Option[Double], neighbor: Long)
   *     normalized to 0.0 inside the comparison (values emit raw) —
   *     Spark's sort also treats NaN as the greatest double and
   *     collapses signed zero in keys while emitting original values;
-  *   - null scores (None) rank last (`desc` defaults to nulls-last);
+  *   - null scores rank last (`desc` defaults to nulls-last);
   *   - ties break by neighbor id ascending.
   * So for any candidate multiset the k survivors and their order are
   * identical to the window's, and the DuckDB `row_number()` oracle
   * replays unchanged.
   */
-class TopKNeighbors(k: Int) extends BoundedTopK[ScoredNeighbor](k) {
-
-  /** < 0 iff `a` outranks `b` under (score desc nulls-last,
-    * neighbor asc). Signed zero is normalized (+0.0) INSIDE the
-    * comparison only — Spark's sort keys collapse −0.0/0.0 but the
-    * window still EMITS the original value, so the buffer must keep
-    * the raw score and only compare the normalized one. */
-  override protected def cmp(a: ScoredNeighbor, b: ScoredNeighbor)
-      : Int =
-    (a.cosine, b.cosine) match {
-      case (Some(x), Some(y)) =>
-        val c = java.lang.Double.compare(y + 0.0, x + 0.0)
-        if (c != 0) c else java.lang.Long.compare(a.neighbor, b.neighbor)
-      case (Some(_), None) => -1
-      case (None, Some(_)) => 1
-      case (None, None) =>
-        java.lang.Long.compare(a.neighbor, b.neighbor)
-    }
-
-  override def bufferEncoder: Encoder[Seq[ScoredNeighbor]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[
-      Seq[ScoredNeighbor]]()
-  override def outputEncoder: Encoder[Seq[ScoredNeighbor]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[
-      Seq[ScoredNeighbor]]()
-}
-
 object TopKNeighbors {
   /** `topk(k)(cosine, neighbor)` → `array<struct<cosine, neighbor>>`
     * column holding the k best candidates in rank order. Neighbor ids
     * must be integral (buffered as Long).
     *
-    * Since round 6 this routes to the native
-    * [[TopKNeighborsAgg]] (primitive buffer, no per-row encoder
-    * allocation — the ANN candidate streams are 10⁷-10⁸ rows at the
-    * replica scales); [[topkUdaf]] keeps the original Aggregator form
-    * as the audited semantics twin (native ≡ udaf ≡ window pinned in
-    * PipelineSpec/PropertySpec). */
+    * Runs as the native [[TopKNeighborsAgg]] (primitive buffer, no
+    * per-row encoder allocation — the ANN candidate streams are
+    * 10⁷-10⁸ rows at the replica scales). Its structurally independent
+    * semantics twin, the `udaf(Aggregator)` form, lives with the tests
+    * (native ≡ udaf ≡ window pinned in PipelineSpec/PropertySpec). */
   def topk(k: Int)(cosine: Column, neighbor: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge._
     column(TopKNeighborsAgg(expression(cosine.cast("double")),
       expression(neighbor.cast("bigint")), k).toAggregateExpression())
   }
-
-  /** the pre-round-6 `udaf(Aggregator)` form — retained as the
-    * structurally independent semantics twin of [[TopKNeighborsAgg]]. */
-  def topkUdaf(k: Int)(cosine: Column, neighbor: Column): Column =
-    udaf(new TopKNeighbors(k)).apply(cosine, neighbor)
 }

@@ -7,16 +7,17 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** Primitive-buffer k-bounded top-(score desc, neighbor asc) buffer —
-  * the native twin of [[TopKNeighbors]]'s Aggregator form, insert and
-  * merge semantics identical line-for-line (binary search, ties after
-  * equals, `buf.last` reject gate). */
+  * the native twin of the `udaf(Aggregator)` form kept with the tests
+  * (`graft.TopKNeighborsUdaf`), insert and merge semantics identical
+  * line-for-line (binary search, ties after equals, `buf.last` reject
+  * gate). */
 final class TopKNeighborsBuf(val k: Int) extends Serializable {
   val scores = new Array[Double](k)
   val hasScore = new Array[Boolean](k) // false ⇒ null score (ranks last)
   val neighbors = new Array[Long](k)
   var size = 0
 
-  /** < 0 iff a outranks b — [[TopKNeighbors.cmp]] verbatim: scores
+  /** < 0 iff a outranks b — the Aggregator twin's `cmp` verbatim: scores
     * descend via Double.compare with −0.0 normalized (NaN greatest,
     * like Spark's sort keys), null scores last, neighbor asc ties. */
   @inline def cmp(aNull: Boolean, a: Double, an: Long,
@@ -88,7 +89,7 @@ final class TopKNeighborsBuf(val k: Int) extends Serializable {
 
 /** Bounded top-k neighbors as a native [[TypedImperativeAggregate]] —
   * the round-6 hot-path replacement for the `udaf(Aggregator)` form of
-  * [[TopKNeighbors]] in the ANN rankings.
+  * [[TopKNeighbors.topk]] in the ANN rankings.
   *
   * Why: `udaf` wraps the Aggregator behind an ExpressionEncoder that
   * deserializes EVERY input row into a `ScoredNeighbor(Option[Double],
@@ -98,7 +99,7 @@ final class TopKNeighborsBuf(val k: Int) extends Serializable {
   * replicas — allocation, not comparison, dominated. This aggregate
   * reads the two child primitives straight off the InternalRow, keeps
   * the buffer as primitive arrays, and serializes it compactly at the
-  * partial/final boundary. Semantics are [[TopKNeighbors]]'s exactly
+  * partial/final boundary. Semantics are the Aggregator form's exactly
   * (same cmp, same tie/NaN/null/signed-zero rules, same merge) —
   * pinned by the adversarial-ordering and window-parity suites, plus a
   * direct native≡udaf pin.

@@ -10,4 +10,8 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** wait until every listener event posted so far is delivered */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 }

@@ -491,7 +491,7 @@ class PipelineSpec extends SparkTestBase {
       // pin it against the retained udaf(Aggregator) twin on the same
       // adversarial frame
       val viaUdaf = cand.groupBy("id")
-        .agg(graft.functions.TopKNeighbors.topkUdaf(k)(
+        .agg(TopKNeighborsUdaf.topk(k)(
           col("cosine"), col("neighbor")).as("top"))
         .select(col("id"), posexplode(col("top")))
         .select(col("id"), (col("pos") + 1).as("rank"),
