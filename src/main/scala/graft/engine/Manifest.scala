@@ -22,8 +22,16 @@ import org.apache.spark.sql.functions._
   */
 object Manifest {
 
-  val schemaCols = Seq("snapshot_id", "partition_id", "status", "n_checked",
-    "n_failed", "fingerprint", "seq", "input_fp")
+  /** the on-disk row schema; every read declares it, so no read infers
+    * it from Parquet footers. Files written before `input_fp` existed
+    * read that column as null (those rows resume on snapshot match
+    * only). */
+  private val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    "snapshot_id STRING, partition_id INT, status STRING, " +
+    "n_checked BIGINT, n_failed BIGINT, fingerprint BIGINT, " +
+    "seq BIGINT, input_fp STRING")
+
+  val schemaCols: Seq[String] = schema.fieldNames.toSeq
 
   def path(outDir: String): String = s"$outDir/_manifest"
 
@@ -33,30 +41,48 @@ object Manifest {
     // not just a local path
     val hp = new org.apache.hadoop.fs.Path(p)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val df =
-      if (!fs.exists(hp))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "snapshot_id STRING, partition_id INT, status STRING, " +
-            "n_checked BIGINT, n_failed BIGINT, fingerprint BIGINT, " +
-            "seq BIGINT, input_fp STRING"))
-      else spark.read.parquet(p)
-    // manifests written before the input_fp column existed read as
-    // null-fp rows (they resume on snapshot match only)
-    if (df.columns.contains("input_fp")) df
-    else df.withColumn("input_fp", lit(null).cast("string"))
+    if (fs.exists(hp)) spark.read.schema(schema).parquet(p)
+    else spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
   }
 
-  /** partitions already completed for this snapshot (latest row wins). */
-  def completed(spark: SparkSession, outDir: String,
-                snapshotId: String): Set[Int] = {
-    load(spark, outDir)
-      .where(col("snapshot_id") === snapshotId &&
-        col("status") === "done")
-      .select("partition_id").distinct()
-      .collect().map(_.getInt(0)).toSet
+  /** what resume needs from the log, read in one pass.
+    *  - `completed`: partitions with a `done` row for the snapshot asked
+    *    about (empty when none was);
+    *  - `latestInputFps`: per partition, the `input_fp` of its latest
+    *    (by `seq`) `done` row that has one;
+    *  - `nextSeq`: one past the largest recorded `seq`, 0 for an empty
+    *    log. */
+  final case class State(completed: Set[Int],
+                         latestInputFps: Map[Int, String],
+                         nextSeq: Long)
+
+  /** one grouped action over the log: the driver receives at most one
+    * row per partition, however many rows resumes have appended. */
+  def state(spark: SparkSession, outDir: String,
+            snapshotId: Option[String]): State = {
+    val done = col("status") === "done"
+    val hasFp = done && col("input_fp").isNotNull
+    val rows = load(spark, outDir).groupBy("partition_id").agg(
+        bool_or(snapshotId.fold(lit(false))(s =>
+          done && col("snapshot_id") === s)).as("done_snap"),
+        max_by(when(hasFp, col("input_fp")), when(hasFp, col("seq")))
+          .as("input_fp"),
+        max(col("seq")).as("max_seq"))
+      .collect()
+    State(
+      rows.filter(r => !r.isNullAt(1) && r.getBoolean(1))
+        .map(_.getInt(0)).toSet,
+      rows.filterNot(_.isNullAt(2))
+        .map(r => r.getInt(0) -> r.getString(2)).toMap,
+      rows.filterNot(_.isNullAt(3)).map(_.getLong(3))
+        .maxOption.fold(0L)(_ + 1L))
   }
+
+  /** partitions already completed for this snapshot. */
+  def completed(spark: SparkSession, outDir: String,
+                snapshotId: String): Set[Int] =
+    state(spark, outDir, Some(snapshotId)).completed
 
   /** latest recorded per-partition INPUT fingerprint (any snapshot,
     * latest `seq` wins) — the incremental-resume key: a partition whose
@@ -66,21 +92,23 @@ object Manifest {
     * an Iceberg incremental scan: snapshot evolution only recomputes
     * the partitions it actually touched. */
   def latestInputFps(spark: SparkSession, outDir: String)
-      : Map[Int, String] = {
-    load(spark, outDir)
-      .where(col("status") === "done" && col("input_fp").isNotNull)
-      .groupBy("partition_id")
-      .agg(max_by(col("input_fp"), col("seq")).as("input_fp"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getString(1)).toMap
-  }
+      : Map[Int, String] =
+    state(spark, outDir, None).latestInputFps
 
   /** next free `seq` value — strictly greater than every recorded row's,
     * so a re-validated partition's new row always wins the
     * latest-row-by-seq tiebreak in [[latestInputFps]]. */
-  def nextSeq(spark: SparkSession, outDir: String): Long = {
-    val r = load(spark, outDir).agg(max(col("seq"))).collect()(0)
-    if (r.isNullAt(0)) 0L else r.getLong(0) + 1L
+  def nextSeq(spark: SparkSession, outDir: String): Long =
+    state(spark, outDir, None).nextSeq
+
+  /** overwrites `path` with `viols` and returns the partition's
+    * `n_failed`: its distinct failing `doc_id`s, read back with the
+    * schema just written (no footer inference). */
+  private[graft] def writeViolations(viols: DataFrame, path: String)
+      : Long = {
+    viols.write.mode(SaveMode.Overwrite).parquet(path)
+    viols.sparkSession.read.schema(viols.schema).parquet(path)
+      .select("doc_id").distinct().count()
   }
 
   /** append one completed-partition row (atomic enough: parquet append

@@ -81,6 +81,9 @@ object Runner {
       scala.util.hashing.MurmurHash3.stringHash(
         files.sorted.mkString("\n")).toLong)
 
+  /** one recursive listing of `inputDir/docs`, every data file as
+    * `path:size`; `run` derives the snapshot id, the per-partition input
+    * fingerprints and the partition set from a single call. */
   private def dataFiles(spark: SparkSession, inputDir: String)
       : Seq[String] = {
     import org.apache.hadoop.fs.Path
@@ -105,10 +108,13 @@ object Runner {
     * changes whenever ANY file changes). Empty map when the layout is
     * not `part=k`-partitioned — callers then fall back to global
     * snapshot-keyed resume. */
-  private val PartRe = ".*/part=(\\d+)/.*".r
   def partitionInputFps(spark: SparkSession, inputDir: String)
-      : Map[Int, String] = {
-    val keyed = dataFiles(spark, inputDir).map {
+      : Map[Int, String] =
+    partitionFps(dataFiles(spark, inputDir))
+
+  private val PartRe = ".*/part=(\\d+)/.*".r
+  private def partitionFps(files: Seq[String]): Map[Int, String] = {
+    val keyed = files.map {
       case f @ PartRe(k) => k.toInt -> f
       case _             => -1 -> "" // unpartitioned layout marker
     }
@@ -116,6 +122,17 @@ object Runner {
     else keyed.groupBy(_._1)
       .map { case (k, fs) => k -> hashListing(fs.map(_._2)) }
   }
+
+  private val ConcurrencyKey = "spark.graft.runner.concurrency"
+
+  /** `spark.graft.runner.concurrency`, default 4; anything but an
+    * integer >= 1 fails with a message that names the key. */
+  private def concurrency(spark: SparkSession): Int =
+    spark.conf.getOption(ConcurrencyKey).fold(4) { v =>
+      v.trim.toIntOption.filter(_ >= 1).getOrElse(
+        throw new IllegalArgumentException(
+          s"$ConcurrencyKey must be an integer >= 1, got '$v'"))
+    }
 
   /** the run's contract catalog, written with every run manifest so
     * outputs record exactly which contracts they enforced (the `publish`
@@ -128,18 +145,6 @@ object Runner {
       .register("mediaSpan", SpanDocs.mediaSpan, "media span branch",
         "core")
 
-  /** Returns (processed, skipped) partition counts.
-    *
-    * Per-partition job hygiene: input row count and the content
-    * fingerprint are OBSERVED on the contract-validation branch of the
-    * violations write (one pass — `observe` metrics ride the write job
-    * for free), so each partition costs two jobs (write + small
-    * read-back for the distinct-failing-docs metric) instead of four.
-    * Partitions are processed `spark.graft.runner.concurrency`-way
-    * concurrently (default 4): each is an independent Spark job, so the
-    * scheduler interleaves their stages and a long tail partition no
-    * longer serializes the run. Crash-safety is per partition (outputs
-    * before manifest row), so concurrency does not weaken resume. */
   /** thrown when the violation-rate circuit breaker trips: at 10¹² rows
     * a systematically-broken snapshot (bad upstream writer, schema
     * drift) must fail in minutes, not burn a day writing 10¹¹ violation
@@ -152,7 +157,10 @@ object Runner {
           math.max(1L, nChecked)}%.4f over $nChecked%d docs after " +
         f"$processed%d partitions exceeds maxViolRate=$maxRate%.4f")
 
-  /** `format` is any Spark DataSource able to represent the span schema
+  /** Validates the pending partitions of `inputDir/docs` into `outDir`
+    * and returns (processed, skipped) partition counts.
+    *
+    * `format` is any Spark DataSource able to represent the span schema
     * (parquet default; orc and json ship with Spark — json callers
     * should write with an embedded-schema-preserving generator or
     * accept inference). The violations/manifest SINK stays parquet:
@@ -165,6 +173,34 @@ object Runner {
     * the current `part=k` file listing — so appending one partition's
     * files to a 10¹²-row table recomputes ONE partition, not all of
     * them (incremental-scan semantics; see [[partitionInputFps]]).
+    *
+    * Set-up cost is O(1) Spark jobs, whatever the partition count: the
+    * input is listed once, and the snapshot id, the per-partition input
+    * fingerprints and the partition set (the `part=k` directory names)
+    * all derive from that listing; only a layout that is not `part=k`
+    * pays a `distinct` scan of the `part` column. The manifest is read
+    * once, with its declared schema, as one grouped action that returns
+    * one row per partition ([[Manifest.state]]), and the media table is
+    * read only when some partition is pending (its schema merge is a
+    * fourth job). A no-op resume runs three jobs: the docs schema merge
+    * and the manifest aggregate's two stages. Because partitions are
+    * named by their directories, a `part=k` directory whose data files
+    * hold zero rows is a partition: it is validated with
+    * `n_checked = 0` and gets a manifest row (`partitionBy` never
+    * writes such a directory).
+    *
+    * Per partition: input row count and the content fingerprint are
+    * OBSERVED on the contract-validation branch of the violations write
+    * (`observe` metrics ride the write job for free); the write, the
+    * distinct-failing-docs read-back and the manifest append cost nine
+    * jobs (AQE runs each shuffle and broadcast stage as its own job), so
+    * a resume of two partitions runs 22 jobs, 11 a partition with the
+    * set-up counted in. Partitions are processed
+    * `spark.graft.runner.concurrency`-way concurrently (default 4; an
+    * integer >= 1): each is an independent Spark job, so the scheduler
+    * interleaves their stages and a long tail partition no longer
+    * serializes the run. Crash-safety is per partition (outputs before
+    * manifest row), so concurrency does not weaken resume.
     *
     * `maxViolRate` arms the circuit breaker: once the cumulative
     * distinct-failing-doc rate across completed partitions exceeds it,
@@ -187,7 +223,9 @@ object Runner {
           maxViolRate: Option[Double] = None,
           allowBreakingDrift: Boolean = false): (Int, Int) = {
     import org.apache.hadoop.fs.Path
-    val snap = snapshotId(spark, inputDir)
+    val conc = concurrency(spark)
+    val files = dataFiles(spark, inputDir)
+    val snap = hashListing(files)
     // contract catalog rides with the outputs (idempotent overwrite),
     // written through the Hadoop FS so outDir may be any store
     val regPath = new Path(outDir, "_registry.json")
@@ -201,8 +239,6 @@ object Runner {
     // option, other sources ignore it harmlessly
     val docs = spark.read.option("mergeSchema", "true")
       .format(format).load(s"$inputDir/docs")
-    val media = spark.read.option("mergeSchema", "true")
-      .format(format).load(s"$inputDir/media").cache()
     // schema-drift gate: compare against the last validated snapshot's
     // recorded schema and fail fast on breaking drift (O(schema), runs
     // before any data is touched)
@@ -223,29 +259,27 @@ object Runner {
     val sOut = fs.create(schemaPath, true)
     try sOut.write(curSchema.json.getBytes("UTF-8"))
     finally sOut.close()
-    val parts = docs.select("part").distinct().collect()
-      .map(_.getInt(0)).sorted
-    val partFps = partitionInputFps(spark, inputDir)
-    val doneSnap = Manifest.completed(spark, outDir, snap)
-    val doneFp: Set[Int] =
-      if (partFps.isEmpty) Set.empty
-      else {
-        val recorded = Manifest.latestInputFps(spark, outDir)
-        parts.filter(k =>
-          recorded.get(k).exists(fp => partFps.get(k).contains(fp))).toSet
-      }
-    val done = doneSnap ++ doneFp
+    val partFps = partitionFps(files)
+    val parts =
+      if (partFps.nonEmpty) partFps.keys.toArray.sorted
+      else docs.select("part").distinct().collect().map(_.getInt(0)).sorted
+    val manifest = Manifest.state(spark, outDir, Some(snap))
+    val doneFp = parts.filter(k => manifest.latestInputFps.get(k)
+      .exists(fp => partFps.get(k).contains(fp))).toSet
+    val done = manifest.completed ++ doneFp
     val pending = parts.filterNot(done).take(maxParts)
-    val seq = new java.util.concurrent.atomic.AtomicLong(
-      Manifest.nextSeq(spark, outDir))
+    // read only when there is work (its schema merge is a job). Not
+    // cached: each partition's broadcast reads only `media_id`, and a
+    // cache costs a materialization job per concurrent partition
+    lazy val media = spark.read.option("mergeSchema", "true")
+      .format(format).load(s"$inputDir/media")
+    val seq = new java.util.concurrent.atomic.AtomicLong(manifest.nextSeq)
     val checkedTotal = new java.util.concurrent.atomic.AtomicLong(0L)
     val failedTotal = new java.util.concurrent.atomic.AtomicLong(0L)
     val ran = new java.util.concurrent.atomic.AtomicInteger(0)
     val tripped = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val conc = spark.conf.getOption("spark.graft.runner.concurrency")
-      .map(_.toInt).getOrElse(4)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(conc, pending.length max 1)))
+      math.min(conc, pending.length max 1))
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     val futures = pending.toSeq.map { k =>
@@ -272,13 +306,11 @@ object Runner {
           "media_id", "doc_id", "docs", Some(true))
         val viols = contractViols.unionByName(uniqViols)
           .unionByName(refViols)
-        viols.write.mode(SaveMode.Overwrite)
-          .parquet(s"$outDir/violations/part=$k")
+        val nFailed =
+          Manifest.writeViolations(viols, s"$outDir/violations/part=$k")
         val metrics = obs.get // metrics from the write job itself
         val counts = metrics("n_checked").asInstanceOf[Long]
         val fp = metrics("fp").asInstanceOf[Long]
-        val nFailed = spark.read.parquet(s"$outDir/violations/part=$k")
-          .select("doc_id").distinct().count()
         Manifest.append(spark, outDir, snap, k, counts, nFailed, fp,
           seq.getAndIncrement(), partFps.get(k))
         ran.incrementAndGet()

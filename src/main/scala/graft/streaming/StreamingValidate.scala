@@ -40,12 +40,9 @@ object StreamingValidate {
       val done = Manifest.completed(spark, outDir, snapshotId)
       if (!done.contains(batchId.toInt)) {
         val viols = Validate.violations(batch, contract, idCol, "stream")
-        viols.write.mode("overwrite")
-          .parquet(s"$outDir/violations/part=$batchId")
+        val nFailed = Manifest.writeViolations(viols,
+          s"$outDir/violations/part=$batchId")
         val n = batch.count()
-        val nFailed = spark.read
-          .parquet(s"$outDir/violations/part=$batchId")
-          .select("doc_id").distinct().count()
         Manifest.append(spark, outDir, snapshotId, batchId.toInt, n,
           nFailed, 0L, batchId)
       }

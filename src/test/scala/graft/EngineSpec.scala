@@ -351,6 +351,173 @@ class EngineSpec extends SparkTestBase {
       s"resume after abort: processed=$p skipped=$s")
   }
 
+  /** Spark jobs that `body` starts, counted through a job group */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${java.util.UUID.randomUUID}"
+    sc.setJobGroup(group, "counted")
+    val r = try body finally sc.clearJobGroup()
+    org.apache.spark.sql.GraftColumnBridge.drainListenerBus(sc)
+    (r, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
+  private val legacyCols = Manifest.schemaCols.filterNot(_ == "input_fp")
+
+  /** appends manifest rows to `outDir` in one file; `withFp` false
+    * writes the legacy 7-column layout (no `input_fp`) */
+  private def writeManifest(outDir: String, withFp: Boolean,
+      rows: Seq[(String, Int, String, Long, String)]): Unit = {
+    import spark.implicits._
+    val df = rows.map { case (snap, k, status, seq, fp) =>
+        (snap, k, status, 10L, 1L, 0L, seq, fp) }
+      .toDF(Manifest.schemaCols: _*).coalesce(1)
+    (if (withFp) df else df.select(legacyCols.map(col): _*))
+      .write.mode("append").parquet(Manifest.path(outDir))
+  }
+
+  test("no-op resume: one input listing and one manifest read, a " +
+       "bounded number of Spark jobs") {
+    val tmp = Files.createTempDirectory("graft-noop").toString
+    Runner.init(spark, s"$tmp/in", 2000, 4)
+    assert(Runner.run(spark, s"$tmp/in", s"$tmp/out") == (4, 0))
+    val (r, jobs) = jobsOf(Runner.run(spark, s"$tmp/in", s"$tmp/out"))
+    assert(r == (0, 4))
+    // 3: the docs schema merge and the manifest aggregate's two stages
+    // (a set-up with three manifest reads and a distinct scan ran 13)
+    info(s"no-op resume ran $jobs jobs")
+    assert(jobs <= 4, s"no-op resume ran $jobs jobs")
+  }
+
+  test("a run leaves no media table cached in the session") {
+    import org.apache.spark.storage.StorageLevel
+    val tmp = Files.createTempDirectory("graft-media").toString
+    Runner.init(spark, s"$tmp/in", 1000, 2)
+    assert(Runner.run(spark, s"$tmp/in", s"$tmp/out") == (2, 0))
+    assert(spark.read.option("mergeSchema", "true").format("parquet")
+      .load(s"$tmp/in/media").storageLevel == StorageLevel.NONE)
+  }
+
+  /** the error `run` throws with `spark.graft.runner.concurrency` set */
+  private def concurrencyError(value: String): String = {
+    val tmp = Files.createTempDirectory("graft-conc").toString
+    val key = "spark.graft.runner.concurrency"
+    spark.conf.set(key, value)
+    try intercept[IllegalArgumentException] {
+      Runner.run(spark, s"$tmp/in", s"$tmp/out")
+    }.getMessage
+    finally spark.conf.unset(key)
+  }
+
+  test("spark.graft.runner.concurrency: a non-integer fails with a " +
+       "message naming the key") {
+    val msg = concurrencyError("four")
+    assert(msg.contains("spark.graft.runner.concurrency") &&
+      msg.contains("four"), msg)
+  }
+
+  test("spark.graft.runner.concurrency: a value below 1 fails with a " +
+       "message naming the key") {
+    for (bad <- Seq("0", "-2")) {
+      val msg = concurrencyError(bad)
+      assert(msg.contains("spark.graft.runner.concurrency") &&
+        msg.contains(s"'$bad'"), msg)
+    }
+  }
+
+  test("legacy manifest without input_fp: a run resumes on snapshot " +
+       "match only") {
+    val tmp = Files.createTempDirectory("graft-legacy").toString
+    Runner.init(spark, s"$tmp/in", 2000, 4)
+    val snap = Runner.snapshotId(spark, s"$tmp/in")
+    // partition 0 done for this snapshot; partition 1 for an older one
+    writeManifest(s"$tmp/out", withFp = false,
+      Seq((snap, 0, "done", 0L, null), ("0ld", 1, "done", 1L, null)))
+    assert(spark.read.parquet(Manifest.path(s"$tmp/out")).columns.toSeq ==
+      legacyCols)
+    assert(Manifest.latestInputFps(spark, s"$tmp/out").isEmpty)
+    val (p, s) = Runner.run(spark, s"$tmp/in", s"$tmp/out")
+    assert(p == 3 && s == 1, s"processed=$p skipped=$s")
+    val fps = Runner.partitionInputFps(spark, s"$tmp/in")
+    assert(Manifest.latestInputFps(spark, s"$tmp/out") == fps - 0)
+    assert(Manifest.nextSeq(spark, s"$tmp/out") == 5L)
+  }
+
+  test("mixed manifest of legacy and input_fp files: latestInputFps " +
+       "returns the fingerprints of the new rows") {
+    val tmp = Files.createTempDirectory("graft-mixed").toString
+    val out = s"$tmp/out"
+    // several legacy files, so the legacy footer is the likely first one
+    for (k <- 0 until 4)
+      writeManifest(out, withFp = false,
+        Seq(("s0", k, "done", k.toLong, null)))
+    writeManifest(out, withFp = true,
+      Seq(("s1", 1, "done", 4L, "fp1"), ("s1", 2, "done", 5L, "fp2")))
+    assert(Manifest.latestInputFps(spark, out) == Map(1 -> "fp1", 2 -> "fp2"))
+    assert(Manifest.completed(spark, out, "s0") == Set(0, 1, 2, 3))
+    assert(Manifest.nextSeq(spark, out) == 6L)
+  }
+
+  test("manifest views equal their one-query-each definitions over " +
+       "several snapshots, a re-validated partition and null input_fp") {
+    val tmp = Files.createTempDirectory("graft-mstate").toString
+    val out = s"$tmp/out"
+    assert(Manifest.state(spark, out, Some("a")) ==
+      Manifest.State(Set.empty, Map.empty, 0L))
+    writeManifest(out, withFp = false,
+      Seq(("a", 0, "done", 0L, null), ("a", 1, "done", 1L, null)))
+    writeManifest(out, withFp = true, Seq(
+      ("a", 2, "done", 2L, "f2a"),
+      ("b", 2, "done", 7L, "f2b"), // re-validated: the later seq wins
+      ("b", 0, "done", 3L, null),
+      ("b", 1, "failed", 9L, "f1x"), // not done: never a resume key
+      ("c", 3, "done", 4L, "f3"),
+      ("c", 3, "done", 6L, null))) // a null fp does not hide f3
+    writeManifest(out, withFp = true, Seq(("b", 4, "done", 5L, "f4")))
+    val m = Manifest.load(spark, out)
+    def completedDef(snap: String): Set[Int] =
+      m.where(col("snapshot_id") === snap && col("status") === "done")
+        .select("partition_id").distinct()
+        .collect().map(_.getInt(0)).toSet
+    val fpsDef = m.where(col("status") === "done" &&
+        col("input_fp").isNotNull)
+      .groupBy("partition_id")
+      .agg(max_by(col("input_fp"), col("seq")).as("input_fp"))
+      .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+    val seqDef = m.agg(max(col("seq"))).collect()(0).getLong(0) + 1L
+    for (snap <- Seq("a", "b", "c", "z"))
+      assert(Manifest.completed(spark, out, snap) == completedDef(snap),
+        s"completed($snap)")
+    assert(fpsDef == Map(2 -> "f2b", 3 -> "f3", 4 -> "f4"))
+    assert(Manifest.latestInputFps(spark, out) == fpsDef)
+    assert(Manifest.nextSeq(spark, out) == seqDef && seqDef == 10L)
+    assert(Manifest.state(spark, out, Some("b")) ==
+      Manifest.State(completedDef("b"), fpsDef, seqDef))
+  }
+
+  test("a part=k directory whose data files hold zero rows is a " +
+       "partition: validated with n_checked = 0") {
+    val tmp = Files.createTempDirectory("graft-empty").toString
+    Runner.init(spark, s"$tmp/in", 1000, 2)
+    spark.read.parquet(s"$tmp/in/docs").drop("part").limit(0)
+      .write.parquet(s"$tmp/empty")
+    val src = Files.list(java.nio.file.Paths.get(s"$tmp/empty"))
+    try src.filter(_.getFileName.toString.endsWith(".parquet"))
+      .forEach { f =>
+        val dst = java.nio.file.Paths.get(s"$tmp/in/docs/part=2")
+        Files.createDirectories(dst)
+        Files.copy(f, dst.resolve(f.getFileName))
+      }
+    finally src.close()
+    assert(Runner.partitionInputFps(spark, s"$tmp/in").keySet ==
+      Set(0, 1, 2))
+    assert(Runner.run(spark, s"$tmp/in", s"$tmp/out") == (3, 0))
+    val rows = Manifest.load(spark, s"$tmp/out")
+      .where(col("partition_id") === 2).collect()
+    assert(rows.length == 1 && rows(0).getAs[Long]("n_checked") == 0L &&
+      rows(0).getAs[Long]("n_failed") == 0L)
+    assert(Runner.run(spark, s"$tmp/in", s"$tmp/out") == (0, 3))
+  }
+
   test("profileBy law: each group's row equals profile() of that " +
       "group's filtered frame, incl. a null group key") {
     import spark.implicits._
