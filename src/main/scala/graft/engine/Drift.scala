@@ -3,7 +3,8 @@ package graft.engine
 import org.apache.datasketches.kll.KllDoublesSketch
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.tdigest.TDigestDouble
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders,
+  SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -13,98 +14,47 @@ import org.apache.spark.sql.functions._
   * reference analog (SURVEY.md §2.9) — this is the engine's scale-native
   * extension of `pred` refinements to *distributional* contracts.
   *
-  * Why a custom Aggregator instead of `percentile_approx`: drift needs a
-  * *persistable, mergeable* sketch (saved with a run manifest as the
-  * baseline, merged across partitions and reruns). Two interchangeable
-  * backends ship, both from datasketches-java (public Apache project),
-  * both riding the same Aggregator shape — the buffer ships the
-  * serialized sketch through Spark's partial/final aggregation, so the
-  * whole pass is one scan, constant memory per partition, no shuffle of
-  * raw values, exactly the two-phase shape a 100 TB column needs:
+  * Drift needs a *persistable, mergeable* sketch (saved with a run
+  * manifest as the baseline, merged across partitions and reruns), which
+  * `percentile_approx` does not expose. Two backends ship, both
+  * datasketches-java sketches built by one scan with map-side partials —
+  * constant memory per partition, no shuffle of raw values:
   *
-  *  - KLL ([[sketch]]/[[check]]): provable worst-case rank-error bound
-  *    (~1.65% at k=200) — the default.
+  *  - KLL ([[sketch]]/[[checkAll]]): Spark's built-in
+  *    `kll_sketch_agg_double`, whose bytes are a serialized
+  *    `KllDoublesSketch`; provable worst-case rank-error bound (~1.65%
+  *    at k=200) — the default.
   *  - t-digest ([[sketchTd]]/[[checkTd]]): the north_star's named
   *    sketch (Dunning's merging digest); no worst-case bound but much
   *    tighter accuracy near the tails, where drift alarms usually fire.
+  *    Spark ships no t-digest aggregate: [[TdAgg]] is a typed one.
   */
 object Drift {
 
   val K: Int = 200 // KLL accuracy parameter (~1.65% rank error at k=200)
   val TdK: Short = 200 // t-digest compression (centroids ∝ k)
 
-  /** serialization shim: the KLL sketch rides Spark's aggregation buffer
-    * as a live heap object (updates are O(1) amortized, no per-row
-    * ser/deser — `udaf(Aggregator)` wraps as a TypedImperativeAggregate,
-    * which serializes buffers only at the partial/final exchange). */
-  final class KllHolder(@transient var sketch: KllDoublesSketch)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      val b = sketch.toByteArray
-      out.writeInt(b.length); out.write(b)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      val b = new Array[Byte](in.readInt()); in.readFully(b)
-      sketch = KllDoublesSketch.heapify(Memory.wrap(b))
-    }
-  }
+  /** the KLL aggregate over a numeric column: serialized sketch bytes,
+    * nulls skipped, an empty sketch (n = 0) over no non-null rows. */
+  private[graft] def kllAgg(c: Column): Column =
+    kll_sketch_agg_double(c.cast("double"), K)
 
-  /** Aggregator: Dataset[Double] → serialized KLL sketch bytes. */
-  class KllAgg extends Aggregator[Double, KllHolder, Array[Byte]] {
-    def zero: KllHolder =
-      new KllHolder(KllDoublesSketch.newHeapInstance(K))
-    def reduce(buf: KllHolder, v: Double): KllHolder = {
-      buf.sketch.update(v); buf
-    }
-    def merge(a: KllHolder, b: KllHolder): KllHolder = {
-      a.sketch.merge(b.sketch); a
-    }
-    def finish(buf: KllHolder): Array[Byte] = buf.sketch.toByteArray
-    def bufferEncoder: Encoder[KllHolder] =
-      Encoders.javaSerialization[KllHolder]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
+  private[graft] def heapKll(bytes: Array[Byte]): KllDoublesSketch =
+    KllDoublesSketch.heapify(Memory.wrap(bytes))
 
   /** one-scan sketch of a numeric column (nulls skipped). */
-  def sketch(df: DataFrame, colName: String): KllDoublesSketch = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val agg = new KllAgg().toColumn
-    val bytes = df.select(col(colName).cast("double")).where(col(colName)
-      .isNotNull).as[Double].select(agg).head()
-    KllDoublesSketch.heapify(Memory.wrap(bytes))
-  }
-
-  /** null-safe variant for multi-column passes: per-column null rows
-    * cannot be pre-filtered when many columns share one scan, so the
-    * skip moves into reduce (the encoder maps SQL NULL to None). */
-  class KllAggNullable
-      extends Aggregator[Option[Double], KllHolder, Array[Byte]] {
-    private val inner = new KllAgg()
-    def zero: KllHolder = inner.zero
-    def reduce(buf: KllHolder, v: Option[Double]): KllHolder = {
-      v.foreach(buf.sketch.update); buf
-    }
-    def merge(a: KllHolder, b: KllHolder): KllHolder = inner.merge(a, b)
-    def finish(buf: KllHolder): Array[Byte] = inner.finish(buf)
-    def bufferEncoder: Encoder[KllHolder] = inner.bufferEncoder
-    def outputEncoder: Encoder[Array[Byte]] = inner.outputEncoder
-  }
+  def sketch(df: DataFrame, colName: String): KllDoublesSketch =
+    sketchAll(df, Seq(colName))(colName)
 
   /** sketch MANY numeric columns in ONE scan — at 100 TB, N sketches
-    * must not cost N table scans. One null-safe KLL aggregate per
-    * column rides the same partial/final aggregation; per-column nulls
-    * are skipped inside the aggregate (a WHERE would drop the whole
-    * row for every column). */
+    * must not cost N table scans. One KLL aggregate per column rides the
+    * same partial/final aggregation; per-column nulls are skipped inside
+    * the aggregate (a WHERE would drop the whole row for every column). */
   def sketchAll(df: DataFrame, cols: Seq[String])
       : Map[String, KllDoublesSketch] = {
     require(cols.nonEmpty, "sketchAll needs at least one column")
-    val agg = udaf(new KllAggNullable())
-    val aggCols = cols.map(c => agg(col(c).cast("double")).as(c))
-    val row = df.agg(aggCols.head, aggCols.tail: _*).head()
-    cols.zipWithIndex.map { case (c, i) =>
-      c -> KllDoublesSketch.heapify(Memory.wrap(row.getAs[Array[Byte]](i)))
-    }.toMap
+    val row = df.select(cols.map(c => kllAgg(col(c))): _*).head()
+    cols.indices.map(i => cols(i) -> heapKll(row.getAs[Array[Byte]](i))).toMap
   }
 
   /** drift verdicts for MANY columns between two datasets — exactly
@@ -131,14 +81,10 @@ object Drift {
   }
 
   /** grouped sketches: one per key (e.g. per partition / per day). */
-  def sketchBy(df: DataFrame, colName: String, keyCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val agg = udaf(new KllAgg())
+  def sketchBy(df: DataFrame, colName: String, keyCol: String): DataFrame =
     df.where(col(colName).isNotNull)
       .groupBy(col(keyCol).cast("string").as("key"))
-      .agg(agg(col(colName).cast("double")).as("sketch"))
-  }
+      .agg(kllAgg(col(colName)).as("sketch"))
 
   /** persist a sketch as a one-row parquet alongside a run's outputs —
     * the durable BASELINE a later batch ([[check]]) or stream
@@ -156,15 +102,15 @@ object Drift {
 
   /** load a sketch persisted by [[saveSketch]]; merging across runs is
     * `loadSketch(a).merge(loadSketch(b))` (KLL merge is exact in n). */
-  def loadSketch(spark: SparkSession, path: String): KllDoublesSketch = {
-    val row = spark.read.parquet(path).select("sketch").head()
-    KllDoublesSketch.heapify(Memory.wrap(row.getAs[Array[Byte]](0)))
-  }
+  def loadSketch(spark: SparkSession, path: String): KllDoublesSketch =
+    heapKll(spark.read.parquet(path).select("sketch").head()
+      .getAs[Array[Byte]](0))
 
   // ---- t-digest backend (north_star's named sketch) -----------------
 
-  /** serialization shim for [[TdAgg]] — same live-heap-object pattern
-    * as [[KllHolder]]. */
+  /** serialization shim for [[TdAgg]]: the digest rides the aggregation
+    * buffer as a live heap object, serialized only at the partial/final
+    * exchange (`udaf` wraps as a TypedImperativeAggregate). */
   final class TdHolder(@transient var sketch: TDigestDouble)
       extends Serializable {
     private def writeObject(out: java.io.ObjectOutputStream): Unit = {
@@ -173,7 +119,7 @@ object Drift {
     }
     private def readObject(in: java.io.ObjectInputStream): Unit = {
       val b = new Array[Byte](in.readInt()); in.readFully(b)
-      sketch = TDigestDouble.heapify(Memory.wrap(b))
+      sketch = heapTd(b)
     }
   }
 
@@ -192,15 +138,16 @@ object Drift {
     def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  /** one-scan t-digest of a numeric column (nulls skipped). */
-  def sketchTd(df: DataFrame, colName: String): TDigestDouble = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val agg = new TdAgg().toColumn
-    val bytes = df.select(col(colName).cast("double")).where(col(colName)
-      .isNotNull).as[Double].select(agg).head()
+  /** the t-digest aggregate over a non-null double column. */
+  private[graft] def tdAgg(c: Column): Column = udaf(new TdAgg()).apply(c)
+
+  private[graft] def heapTd(bytes: Array[Byte]): TDigestDouble =
     TDigestDouble.heapify(Memory.wrap(bytes))
-  }
+
+  /** one-scan t-digest of a numeric column (nulls skipped). */
+  def sketchTd(df: DataFrame, colName: String): TDigestDouble =
+    heapTd(df.where(col(colName).isNotNull)
+      .agg(tdAgg(col(colName).cast("double"))).head().getAs[Array[Byte]](0))
 
   case class DriftResult(ks: Double, psi: Double, nA: Long, nB: Long)
 
@@ -247,16 +194,14 @@ object Drift {
   }
 
   /** drift verdict between a column in two datasets (baseline vs
-    * current), as a one-row DataFrame for sink uniformity. */
+    * current), as a one-row DataFrame for sink uniformity: [[checkAll]]
+    * over the one column. A side with no non-null value yields the
+    * indeterminate (NaN, NaN, pass = false) row, as in [[checkAll]] and
+    * [[checkExact]]. */
   def check(baseline: DataFrame, current: DataFrame, colName: String,
             ksThreshold: Double = 0.1, psiThreshold: Double = 0.2)
-           (implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val r = compare(sketch(baseline, colName), sketch(current, colName))
-    Seq((colName, r.ks, r.psi, r.nA, r.nB,
-      r.ks <= ksThreshold && r.psi <= psiThreshold))
-      .toDF("column", "ks", "psi", "n_baseline", "n_current", "pass")
-  }
+           (implicit spark: SparkSession): DataFrame =
+    checkAll(baseline, current, Seq(colName), ksThreshold, psiThreshold)
 
   /** [[check]] on the t-digest backend — same verdict schema, same
     * thresholds, tail-accurate CDFs. */

@@ -3,8 +3,7 @@ package graft.engine
 import org.apache.datasketches.common.ArrayOfStringsSerDe
 import org.apache.datasketches.frequencies.{ErrorType, ItemsSketch}
 import org.apache.datasketches.memory.Memory
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Per-column statistics profile (the column-stats pass of BASELINE.json
@@ -131,58 +130,40 @@ object Stats {
   // DISTINCT value — at 100 TB a high-cardinality column (doc_id-like,
   // 10¹² distincts) makes that a full re-key of the table for a profile
   // that only wants the top handful. The Misra-Gries family bounds the
-  // state instead: a mergeable ItemsSketch (datasketches-java, public
-  // Apache project — same jar as the KLL drift sketch) holds at most
-  // `maxMapSize` counters per partial, merges associatively through
-  // Spark's partial/final aggregation, and guarantees every item with
-  // true count > n/maxMapSize survives with estimate error ≤
+  // state instead: Spark's built-in `approx_top_k_accumulate` keeps a
+  // mergeable datasketches `ItemsSketch` (the jar behind the KLL drift
+  // sketch) with at most `maxMapSize` counters per partial, merges it
+  // through Spark's partial/final aggregation, and guarantees every item
+  // with true count > n/maxMapSize survives with estimate error ≤
   // getMaximumError (0 ⇒ no purge ever happened ⇒ counts are EXACT —
   // the small-scale audit regime the DuckDB oracle checks).
 
-  /** sketch buffer: live heap object between serializations (same shim
-    * pattern as [[Drift.KllHolder]]). */
-  final class FreqHolder(@transient var sketch: ItemsSketch[String])
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      val b = sketch.toByteArray(new ArrayOfStringsSerDe)
-      out.writeInt(b.length); out.write(b)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      val b = new Array[Byte](in.readInt()); in.readFully(b)
-      sketch = ItemsSketch.getInstance(Memory.wrap(b),
-        new ArrayOfStringsSerDe)
-    }
+  /** the frequent-items aggregate: `approx_top_k_accumulate`'s
+    * serialized `ItemsSketch[String]` (nulls skipped; the Scala
+    * `functions` object does not expose it). `maxItemsTracked =
+    * maxMapSize·3/4` gives the map of `new ItemsSketch(maxMapSize)`.
+    * `maxMapSize` must be a power of two from 8 to 2^20 (Spark rounds
+    * other values silently and caps `maxItemsTracked` at 1,000,000);
+    * anything else is an IllegalArgumentException naming it. */
+  private[graft] def topAgg(c: Column, maxMapSize: Int): Column = {
+    require(maxMapSize >= 8 && maxMapSize <= (1 << 20) &&
+      Integer.bitCount(maxMapSize) == 1,
+      s"maxMapSize must be a power of two from 8 to 2^20, got $maxMapSize")
+    call_function("approx_top_k_accumulate", c.cast("string"),
+      lit(maxMapSize * 3 / 4)).getField("sketch")
   }
 
-  /** Aggregator: string column → serialized frequent-items sketch
-    * (nulls skipped inside reduce, like [[Drift.KllAggNullable]]). */
-  class FreqAgg(maxMapSize: Int)
-      extends Aggregator[Option[String], FreqHolder, Array[Byte]] {
-    def zero: FreqHolder = new FreqHolder(new ItemsSketch[String](maxMapSize))
-    def reduce(buf: FreqHolder, v: Option[String]): FreqHolder = {
-      v.foreach(buf.sketch.update); buf
-    }
-    def merge(a: FreqHolder, b: FreqHolder): FreqHolder = {
-      a.sketch.merge(b.sketch); a
-    }
-    def finish(buf: FreqHolder): Array[Byte] =
-      buf.sketch.toByteArray(new ArrayOfStringsSerDe)
-    def bufferEncoder: Encoder[FreqHolder] =
-      Encoders.javaSerialization[FreqHolder]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
+  private def heapItems(bytes: Array[Byte]): ItemsSketch[String] =
+    ItemsSketch.getInstance(Memory.wrap(bytes), new ArrayOfStringsSerDe)
 
-  /** merged sketch over one column in one scan. `maxMapSize` must be a
-    * power of 2; accuracy: estimates overshoot by at most ~3.5/maxMapSize
+  /** merged sketch over one column in one scan ([[topAgg]]; nulls
+    * skipped). Accuracy: estimates overshoot by at most ~3.5/maxMapSize
     * of the stream length (0 when the distinct count never exceeded
     * 0.75·maxMapSize — then the sketch is exact). */
   def frequencySketch(df: DataFrame, colName: String,
-                      maxMapSize: Int = 1024): ItemsSketch[String] = {
-    val agg = udaf(new FreqAgg(maxMapSize))
-    val bytes = df.agg(agg(col(colName).cast("string")))
-      .head().getAs[Array[Byte]](0)
-    ItemsSketch.getInstance(Memory.wrap(bytes), new ArrayOfStringsSerDe)
-  }
+                      maxMapSize: Int = 1024): ItemsSketch[String] =
+    heapItems(df.agg(topAgg(col(colName), maxMapSize))
+      .head().getAs[Array[Byte]](0))
 
   /** finish a sketch to its top-k (value, estimate, lb, ub, exact)
     * entries under the canonical (n desc, value) tie-break — the ONE
@@ -203,8 +184,7 @@ object Stats {
     * aggregation state hands back). */
   def topEntries(bytes: Array[Byte], k: Int)
       : Seq[(String, Long, Long, Long, Boolean)] =
-    finishTop(ItemsSketch.getInstance(Memory.wrap(bytes),
-      new ArrayOfStringsSerDe), k)
+    finishTop(heapItems(bytes), k)
 
   /** top-k values of a column by (estimated) frequency, deterministic
     * tie-break on the value itself. Columns: value, n (estimate),

@@ -365,8 +365,8 @@ object Dedup {
     * ~100 MB — safe on a default driver; hosts with big drivers can
     * raise it via GRAFT_CC_LOCAL_MAX_EDGES. Forced-path parity is
     * pinned in SamplingCcSpec. */
-  private[graft] val localCcMaxEdges: Long =
-    sys.env.getOrElse("GRAFT_CC_LOCAL_MAX_EDGES", "500000").toLong
+  private[graft] lazy val localCcMaxEdges: Long =
+    graft.Knobs.envLong("GRAFT_CC_LOCAL_MAX_EDGES", 500000L)
 
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
                           idB: String = "id_b",

@@ -687,8 +687,8 @@ object Similarity {
     * broadcast data (roughly 2× that as the built hash relation) —
     * within an ordinary executor; raise the cap only with the memory
     * to match. */
-  private val broadcastVecMaxRows: Long =
-    sys.env.getOrElse("GRAFT_BROADCAST_VEC_MAX_ROWS", "500000").toLong
+  private lazy val broadcastVecMaxRows: Long =
+    graft.Knobs.envLong("GRAFT_BROADCAST_VEC_MAX_ROWS", 500000L)
 
   /** row count for the gate, or MaxValue (= never broadcast, and no
     * count job) when the gate is disabled. */

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.contracts.ObjectC
-import graft.engine.{Manifest, SpanDocs, Validate}
+import graft.engine.{Drift, Manifest, SpanDocs, Stats, Validate}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
@@ -31,20 +31,25 @@ object StreamingValidate {
     Validate.violations(stream, contract, idCol, thing)
 
   /** foreachBatch sink: validate each micro-batch, write violations to
-    * `outDir/violations/part=<batchId>`, append a manifest row. */
+    * `outDir/violations/part=<batchId>`, append a manifest row. The
+    * completed set is read once, on the sink's first batch, then kept
+    * current with the batches the sink logs. */
   def foreachBatchSink(stream: DataFrame, contract: ObjectC,
                        idCol: String, outDir: String, snapshotId: String)
       : DataStreamWriter[Row] = {
+    var done: Option[Set[Int]] = None
     stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
-      val done = Manifest.completed(spark, outDir, snapshotId)
-      if (!done.contains(batchId.toInt)) {
+      if (done.isEmpty)
+        done = Some(Manifest.completed(spark, outDir, snapshotId))
+      if (!done.get.contains(batchId.toInt)) {
         val viols = Validate.violations(batch, contract, idCol, "stream")
         val nFailed = Manifest.writeViolations(viols,
           s"$outDir/violations/part=$batchId")
         val n = batch.count()
         Manifest.append(spark, outDir, snapshotId, batchId.toInt, n,
           nFailed, 0L, batchId)
+        done = done.map(_ + batchId.toInt)
       }
       ()
     }
@@ -116,7 +121,7 @@ object StreamingValidate {
       .drop("_grams")
   }
 
-  /** streaming distribution-drift: tumbling-window KLL sketches of a
+  /** streaming distribution-drift: tumbling-window sketches of a
     * numeric column, each compared against a BASELINE sketch (serialized
     * bytes — e.g. from a batch [[graft.engine.Drift.sketch]] persisted
     * with a run manifest) using the same KS/PSI definitions as the batch
@@ -124,7 +129,10 @@ object StreamingValidate {
     * sketch update riding Spark's streaming aggregation state; the
     * comparison runs once per CLOSED WINDOW (append mode), so the scalar
     * UDF here executes once per window row, never in the per-row hot
-    * path. Emits (window_start, window_end, n, ks, psi, pass). */
+    * path. Emits (window_start, window_end, n, ks, psi, pass). A `kll`
+    * checkpoint whose state holds the Java-serialized buffers of the
+    * typed Aggregator that [[graft.engine.Drift.kllAgg]] replaced cannot
+    * be restored: the restart fails with KLL_INVALID_INPUT_SKETCH_BUFFER. */
   def windowedDrift(stream: DataFrame, valueCol: String, tsCol: String,
                     window: String, watermark: String,
                     baseline: Array[Byte], ksThreshold: Double = 0.1,
@@ -132,39 +140,27 @@ object StreamingValidate {
                     backend: String = "kll"): DataFrame = {
     require(baseline != null && baseline.nonEmpty,
       "windowedDrift requires a non-empty serialized baseline sketch")
-    import org.apache.datasketches.kll.KllDoublesSketch
-    import org.apache.datasketches.memory.Memory
-    import org.apache.datasketches.tdigest.TDigestDouble
     // the baseline bytes must come from the SAME backend (Drift.sketch
     // for "kll", Drift.sketchTd for "tdigest")
-    val (sketchAgg, cmp) = backend match {
-      case "kll" =>
-        (udaf(new graft.engine.Drift.KllAgg()),
-          udf((bytes: Array[Byte]) => {
-            val r = graft.engine.Drift.compare(
-              KllDoublesSketch.heapify(Memory.wrap(baseline)),
-              KllDoublesSketch.heapify(Memory.wrap(bytes)))
-            (r.ks, r.psi)
-          }))
-      case "tdigest" =>
-        (udaf(new graft.engine.Drift.TdAgg()),
-          udf((bytes: Array[Byte]) => {
-            val r = graft.engine.Drift.compareTd(
-              TDigestDouble.heapify(Memory.wrap(baseline)),
-              TDigestDouble.heapify(Memory.wrap(bytes)))
-            (r.ks, r.psi)
-          }))
+    val v = col("_v")
+    val (sketchAgg, compare) = backend match {
+      case "kll" => (Drift.kllAgg(v), (b: Array[Byte]) =>
+        Drift.compare(Drift.heapKll(baseline), Drift.heapKll(b)))
+      case "tdigest" => (Drift.tdAgg(v), (b: Array[Byte]) =>
+        Drift.compareTd(Drift.heapTd(baseline), Drift.heapTd(b)))
       case other => throw new IllegalArgumentException(
         s"unknown drift backend '$other' (kll | tdigest)")
     }
+    val cmp = udf((bytes: Array[Byte]) => {
+      val r = compare(bytes); (r.ks, r.psi)
+    })
     // watermark AFTER the cast projection (watermark column identity
     // must survive into the aggregation)
     stream.select(col(tsCol), col(valueCol).cast("double").as("_v"))
-      .where(col("_v").isNotNull)
+      .where(v.isNotNull)
       .withWatermark(tsCol, watermark)
       .groupBy(org.apache.spark.sql.functions.window(col(tsCol), window))
-      .agg(sketchAgg(col("_v")).as("_sketch"),
-        count(lit(1)).as("n"))
+      .agg(sketchAgg.as("_sketch"), count(lit(1)).as("n"))
       .withColumn("_d", cmp(col("_sketch")))
       .select(col("window.start").as("window_start"),
         col("window.end").as("window_end"), col("n"),
@@ -185,19 +181,22 @@ object StreamingValidate {
     * tie-break and exactness rules cannot diverge. Null values are
     * filtered BEFORE the shuffle (a null is a null-rate fact, not a
     * value — and an all-null window must emit nothing, like the batch
-    * path, not a phantom empty row). */
+    * path, not a phantom empty row). A checkpoint whose state holds the
+    * Java-serialized buffers of the typed Aggregator that
+    * [[graft.engine.Stats.topAgg]] replaced cannot be restored: the
+    * restart fails ("Possible Corruption" from the sketch). */
   def windowedTopValues(stream: DataFrame, valueCol: String,
                         tsCol: String, window: String, watermark: String,
                         k: Int = 3, maxMapSize: Int = 1024): DataFrame = {
-    val agg = udaf(new graft.engine.Stats.FreqAgg(maxMapSize))
+    val sk = Stats.topAgg(col("_v"), maxMapSize)
     val top = udf((bytes: Array[Byte]) =>
-      graft.engine.Stats.topEntries(bytes, k)
+      Stats.topEntries(bytes, k)
         .map { case (v, est, _, _, exact) => TopValue(v, est, exact) })
     stream.select(col(tsCol), col(valueCol).cast("string").as("_v"))
       .where(col("_v").isNotNull)
       .withWatermark(tsCol, watermark)
       .groupBy(org.apache.spark.sql.functions.window(col(tsCol), window))
-      .agg(agg(col("_v")).as("_sk"))
+      .agg(sk.as("_sk"))
       .select(col("window"), top(col("_sk")).as("top"))
   }
 

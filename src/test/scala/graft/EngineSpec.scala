@@ -68,6 +68,44 @@ class EngineSpec extends SparkTestBase {
     top.foreach { case (_, _, _, _, exact) => assert(!exact) }
   }
 
+  test("frequencySketch: the built-in top-k sketch has the map of " +
+       "ItemsSketch(maxMapSize)") {
+    import spark.implicits._
+    val df = Seq("a", "b", "a").toDF("s")
+    for (m <- Seq(8, 16, 1024, 1 << 20))
+      assert(Stats.frequencySketch(df, "s", m).getMaximumMapCapacity ==
+        new org.apache.datasketches.frequencies.ItemsSketch[String](m)
+          .getMaximumMapCapacity, s"maxMapSize $m")
+  }
+
+  test("topValues: nulls are skipped; the counts of the rest are exact") {
+    import spark.implicits._
+    val data = Seq.fill(5)("x") ++ Seq.fill(3)("y") ++ Seq("z") ++
+      Seq.fill(4)(null)
+    val df = data.toDF("s").repartition(3)
+    val expected = data.filter(_ != null).groupBy(identity)
+      .map { case (v, xs) => (v, xs.size.toLong) }.toSeq
+      .sortBy { case (v, n) => (-n, v) }
+    val got = Stats.topValues(df, "s", k = 10).collect()
+    assert(got.map(r => (r.getString(0), r.getLong(1))).toSeq == expected)
+    got.foreach { r =>
+      assert(r.getBoolean(4) && r.getLong(2) == r.getLong(1) &&
+        r.getLong(3) == r.getLong(1), s"not exact: $r")
+    }
+    assert(Stats.frequencySketch(df, "s").getStreamLength == 9)
+  }
+
+  test("maxMapSize outside the powers of two from 8 to 2^20 is rejected " +
+       "with a message naming it") {
+    import spark.implicits._
+    val df = Seq("a").toDF("s")
+    for (bad <- Seq(100, 4, 1 << 21)) {
+      val msg = intercept[IllegalArgumentException](
+        Stats.topValues(df, "s", k = 1, maxMapSize = bad)).getMessage
+      assert(msg.contains("maxMapSize") && msg.contains(bad.toString), msg)
+    }
+  }
+
   test("identical distributions: no drift; shifted distributions: drift") {
     val base = SpanGen.docs(spark, 3000, 4)
       .select(size(col("spans")).cast("double").as("n_spans"))
@@ -222,6 +260,20 @@ class EngineSpec extends SparkTestBase {
     assert(r2(0).getAs[Boolean]("pass"))
     assert(!r2(1).getAs[Boolean]("pass") && r2(1).getAs[Double]("ks").isNaN)
     assert(r2(1).getAs[Long]("n_current") == 0L)
+  }
+
+  test("check: a side with no non-null value yields the indeterminate " +
+       "fail row") {
+    import spark.implicits._
+    implicit val s = spark
+    val a = Seq(1.0, 2.0, 3.0).toDF("v")
+    val none = Seq(Option.empty[Double], None).toDF("v")
+    for ((base, cur) <- Seq((a, none), (none, a), (a, a.limit(0)))) {
+      val r = Drift.check(base, cur, "v").head()
+      assert(!r.getAs[Boolean]("pass") && r.getAs[Double]("ks").isNaN &&
+        r.getAs[Double]("psi").isNaN, s"$r")
+    }
+    assert(Drift.check(a, a, "v").head().getAs[Boolean]("pass"))
   }
 
   test("sketch persistence: save/load round-trips bytes; merged runs " +
@@ -422,6 +474,17 @@ class EngineSpec extends SparkTestBase {
       assert(msg.contains("spark.graft.runner.concurrency") &&
         msg.contains(s"'$bad'"), msg)
     }
+  }
+
+  test("env knobs: a value that is not an integer fails with a message " +
+       "naming the knob and the value") {
+    for (bad <- Seq("5e5", "")) {
+      val msg = intercept[IllegalArgumentException](
+        Knobs.long("GRAFT_CC_LOCAL_MAX_EDGES", bad)).getMessage
+      assert(msg.contains("GRAFT_CC_LOCAL_MAX_EDGES") &&
+        msg.contains(s"'$bad'"), msg)
+    }
+    assert(Knobs.long("GRAFT_CC_LOCAL_MAX_EDGES", " 42 ") == 42L)
   }
 
   test("legacy manifest without input_fp: a run resumes on snapshot " +

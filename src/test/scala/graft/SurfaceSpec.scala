@@ -858,6 +858,52 @@ class SurfaceSpec extends SparkTestBase {
       Set("2", "3"))
   }
 
+  test("streaming: foreachBatch sink reads the manifest once, on its " +
+       "first batch") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val tmp = java.nio.file.Files.createTempDirectory("graft-sk1").toString
+    val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    implicit val sq = sqlCtx
+    // an existing manifest (another snapshot's run), so the first batch's
+    // read runs Spark jobs
+    Manifest.append(spark, tmp, "other", 0, 1L, 0L, 0L, 0L)
+    val mem = MemoryStream[(Long, String)]
+    val contract = C.obj("doc_id" -> C.integer,
+      "lang" -> C.oneOf("en", "fr"))
+    val q = StreamingValidate.foreachBatchSink(
+        mem.toDF().toDF("doc_id", "lang"), contract, "doc_id", tmp, "snap1")
+      .option("checkpointLocation", s"$tmp/_ckpt").start()
+    // jobs per micro-batch of this query, keyed by the batch id the
+    // stream puts in every job description it runs
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Long, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.contains(s"runId = ${q.runId}"))
+          .foreach(d => jobs.merge(d.split("batch = ").last.trim.toLong,
+            1, (a: Integer, b: Integer) => a + b))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      for (b <- 0 until 3) {
+        mem.addData((10L * b, "en"), (10L * b + 1, "zz"))
+        q.processAllAvailable()
+      }
+    } finally {
+      q.stop()
+      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    val n = (0L until 3L).map(b => jobs.getOrDefault(b, 0).intValue)
+    info(s"jobs per batch: $n")
+    // batches 1 and 2 run batch 0's jobs minus the manifest read
+    assert(n(1) == n(2) && n(2) < n(0), s"jobs per batch: $n")
+    assert(Manifest.completed(spark, tmp, "snap1") == Set(0, 1, 2))
+  }
+
   test("streaming: kill mid-batch-write, resume — torn output is " +
        "rewritten identically, completed batches never recomputed") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-skr").toString
