@@ -1,6 +1,7 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode,
+  SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Partition-granular run manifest — the checkpoint-resume log of
@@ -18,7 +19,9 @@ import org.apache.spark.sql.functions._
   * directories — so a kill at any point leaves either (a) no manifest row
   * → partition redone idempotently, or (b) manifest row present → outputs
   * complete. Completed partitions are never recomputed (SURVEY.md §5.2
-  * resume test).
+  * resume test). [[commitPartition]] is the one place that keeps this
+  * order (write → `n_failed` read-back → append): `Runner.run` and the
+  * streaming sink both log a partition through it.
   */
 object Manifest {
 
@@ -101,14 +104,35 @@ object Manifest {
   def nextSeq(spark: SparkSession, outDir: String): Long =
     state(spark, outDir, None).nextSeq
 
-  /** overwrites `path` with `viols` and returns the partition's
-    * `n_failed`: its distinct failing `doc_id`s, read back with the
-    * schema just written (no footer inference). */
-  private[graft] def writeViolations(viols: DataFrame, path: String)
-      : Long = {
+  /** The partition kernel: validates `input` into
+    * `outDir/violations/part=<partitionId>` and logs it, in the
+    * crash-safety order of the class doc. One `Observation` on `input`
+    * counts `n_checked` and xors `rowHash` into the content fingerprint;
+    * `violations` must scan its argument once, every row (its other
+    * branches read `input` unobserved, so nothing is counted twice), and
+    * the metrics ride the violations write. `n_failed` (distinct failing
+    * `doc_id`s; `DISTINCT` cannot be observed) is read back with the
+    * schema just written, then the manifest row is appended. Returns
+    * (`n_checked`, `n_failed`). */
+  private[graft] def commitPartition(input: DataFrame, rowHash: Column,
+      violations: DataFrame => DataFrame, outDir: String,
+      snapshotId: String, partitionId: Int, seq: Long,
+      inputFp: Option[String]): (Long, Long) = {
+    val spark = input.sparkSession
+    val obs = Observation(s"part_$partitionId")
+    val viols = violations(input.observe(obs,
+      count(lit(1)).as("n_checked"),
+      // order-independent (commutative, no overflow under ANSI)
+      bit_xor(rowHash).as("fp")))
+    val path = s"$outDir/violations/part=$partitionId"
     viols.write.mode(SaveMode.Overwrite).parquet(path)
-    viols.sparkSession.read.schema(viols.schema).parquet(path)
+    val nFailed = spark.read.schema(viols.schema).parquet(path)
       .select("doc_id").distinct().count()
+    val metrics = obs.get // from the write job itself
+    val nChecked = metrics("n_checked").asInstanceOf[Long]
+    append(spark, outDir, snapshotId, partitionId, nChecked, nFailed,
+      metrics("fp").asInstanceOf[Long], seq, inputFp)
+    (nChecked, nFailed)
   }
 
   /** append one completed-partition row (atomic enough: parquet append

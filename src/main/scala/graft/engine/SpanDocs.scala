@@ -80,8 +80,18 @@ object SpanDocs {
                     * design, so the default forces a broadcast; pass
                     * None to let AQE size-estimate instead */
                   broadcastCatalog: Option[Boolean] = Some(true))
+      : DataFrame =
+    validateAll(docs, docs, media, broadcastCatalog)
+
+  /** [[validateAll]] with the contract branch reading `checked`, `docs`
+    * itself or `docs` under an observation: that branch scans every row
+    * once, and observing the pruned uniqueness and referential scans too
+    * would count rows twice and stop their column pruning. */
+  private[graft] def validateAll(checked: DataFrame, docs: DataFrame,
+                                 media: DataFrame,
+                                 broadcastCatalog: Option[Boolean])
       : DataFrame = {
-    val contractViols = violationsFast(docs)
+    val contractViols = violationsFast(checked)
     val uniqViols =
       Uniqueness.violations(docs.select("doc_id"), "doc_id", "docs")
     val refs = docs.select(col("doc_id"),

@@ -123,17 +123,6 @@ object Validate {
       .withColumn("pass", col("n_failed") === 0L)
   }
 
-  /** task-partition summary (spark_partition_id) — used by the resume
-    * manifest where lineage is per input split. */
-  def summaryByTaskPartition(df: DataFrame, contract: ObjectC): DataFrame = {
-    val v = fastFirstViolation(df, contract)
-    df.withColumn("_fail", v.isNotNull)
-      .groupBy(spark_partition_id().as("partition_id"))
-      .agg(count(lit(1)).as("n_checked"),
-        sum(when(col("_fail"), 1L).otherwise(0L)).as("n_failed"))
-      .withColumn("pass", col("n_failed") === 0L)
-  }
-
   /** literal `check(data)` parity: throw on the FIRST violation with the
     * reference-format message (ContractError semantics,
     * contract.impl.js:167-175 / contract-errors.js) — the driver-side

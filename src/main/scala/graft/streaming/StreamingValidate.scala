@@ -17,11 +17,14 @@ import org.apache.spark.sql.Row
   *    works in append mode with no watermark (the compiled contract is
   *    a projection+filter).
   *  - [[foreachBatchSink]]: per-micro-batch validation wired into the
-  *    SAME manifest/resume log the batch runner uses (batch id =
-  *    partition id) — violations land partitioned by batch, summaries
-  *    append to the manifest, giving exactly-once-per-batch semantics on
-  *    restart via Spark's checkpointing + the manifest's idempotent
-  *    (snapshot, partition) key.
+  *    SAME manifest/resume log the batch runner uses, through the same
+  *    partition kernel ([[graft.engine.Manifest.commitPartition]], batch
+  *    id = partition id) — violations land partitioned by batch, each
+  *    batch's `n_checked` is observed on its violations write (the batch
+  *    is not recomputed to count it), and its row appends to the
+  *    manifest, giving exactly-once-per-batch semantics on restart via
+  *    Spark's checkpointing + the manifest's idempotent (snapshot,
+  *    partition) key.
   */
 object StreamingValidate {
 
@@ -31,9 +34,13 @@ object StreamingValidate {
     Validate.violations(stream, contract, idCol, thing)
 
   /** foreachBatch sink: validate each micro-batch, write violations to
-    * `outDir/violations/part=<batchId>`, append a manifest row. The
-    * completed set is read once, on the sink's first batch, then kept
-    * current with the batches the sink logs. */
+    * `outDir/violations/part=<batchId>`, append a manifest row, all
+    * through [[graft.engine.Manifest.commitPartition]]. `n_checked` is
+    * observed on the violations write, so the batch is not recomputed
+    * to count it (five jobs for a small steady-state batch); the
+    * fingerprint column is 0. The completed set is read once, on the
+    * sink's first batch, then kept current with the batches the sink
+    * logs. */
   def foreachBatchSink(stream: DataFrame, contract: ObjectC,
                        idCol: String, outDir: String, snapshotId: String)
       : DataStreamWriter[Row] = {
@@ -43,12 +50,9 @@ object StreamingValidate {
       if (done.isEmpty)
         done = Some(Manifest.completed(spark, outDir, snapshotId))
       if (!done.get.contains(batchId.toInt)) {
-        val viols = Validate.violations(batch, contract, idCol, "stream")
-        val nFailed = Manifest.writeViolations(viols,
-          s"$outDir/violations/part=$batchId")
-        val n = batch.count()
-        Manifest.append(spark, outDir, snapshotId, batchId.toInt, n,
-          nFailed, 0L, batchId)
+        Manifest.commitPartition(batch, lit(0L),
+          Validate.violations(_, contract, idCol, "stream"), outDir,
+          snapshotId, batchId.toInt, batchId, None)
         done = done.map(_ + batchId.toInt)
       }
       ()

@@ -440,6 +440,30 @@ class EngineSpec extends SparkTestBase {
     assert(jobs <= 4, s"no-op resume ran $jobs jobs")
   }
 
+  test("per partition: at most nine Spark jobs; manifest counts equal " +
+       "a direct count and validateAll of the slice") {
+    val tmp = Files.createTempDirectory("graft-kernel").toString
+    Runner.init(spark, s"$tmp/in", 2000, 4)
+    // set-up is the same in both runs, so the difference is one
+    // partition's validate, write, read-back and append
+    val (_, one) = jobsOf(Runner.run(spark, s"$tmp/in", s"$tmp/one", 1))
+    val (r, two) = jobsOf(Runner.run(spark, s"$tmp/in", s"$tmp/two", 2))
+    assert(r == (2, 0))
+    info(s"runs of 1 and 2 partitions: $one and $two jobs")
+    assert(two - one <= 9, s"per-partition jobs: ${two - one}")
+    val docs = spark.read.parquet(s"$tmp/in/docs")
+    val media = spark.read.parquet(s"$tmp/in/media")
+    val rows = Manifest.load(spark, s"$tmp/two").collect()
+    assert(rows.length == 2)
+    rows.foreach { row =>
+      val k = row.getAs[Int]("partition_id")
+      val slice = docs.where(col("part") === k)
+      assert(row.getAs[Long]("n_checked") == slice.count(), s"part=$k")
+      assert(row.getAs[Long]("n_failed") == SpanDocs.validateAll(slice,
+        media).select("doc_id").distinct().count(), s"part=$k")
+    }
+  }
+
   test("a run leaves no media table cached in the session") {
     import org.apache.spark.storage.StorageLevel
     val tmp = Files.createTempDirectory("graft-media").toString

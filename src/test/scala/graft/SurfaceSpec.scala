@@ -416,16 +416,6 @@ class SurfaceSpec extends SparkTestBase {
       "for the field `x` of the object\n"))
   }
 
-  // --- task-partition summary ---
-  test("summaryByTaskPartition totals match row counts") {
-    val docs = gen.SpanGen.docs(spark, 500, 4,
-      defects = gen.SpanGen.Defects(badKind = true, rate = 50))
-    val rows = Validate.summaryByTaskPartition(docs, SpanDocs.contract)
-      .collect()
-    assert(rows.map(_.getAs[Long]("n_checked")).sum == 500)
-    assert(rows.map(_.getAs[Long]("n_failed")).sum > 0)
-  }
-
   // --- sampling + diff ---
   test("samplePerCheck caps rows per check; diff detects drift") {
     val docs = gen.SpanGen.docs(spark, 3000, 4,
@@ -902,6 +892,50 @@ class SurfaceSpec extends SparkTestBase {
     // batches 1 and 2 run batch 0's jobs minus the manifest read
     assert(n(1) == n(2) && n(2) < n(0), s"jobs per batch: $n")
     assert(Manifest.completed(spark, tmp, "snap1") == Set(0, 1, 2))
+  }
+
+  test("streaming: foreachBatch sink observes n_checked; a steady-state " +
+       "micro-batch runs at most five jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val tmp = java.nio.file.Files.createTempDirectory("graft-sko").toString
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    val mem = MemoryStream[(Long, String)]
+    val contract = C.obj("doc_id" -> C.integer,
+      "lang" -> C.oneOf("en", "fr"))
+    val q = StreamingValidate.foreachBatchSink(
+        mem.toDF().toDF("doc_id", "lang"), contract, "doc_id", tmp, "snap1")
+      .option("checkpointLocation", s"$tmp/_ckpt").start()
+    // jobs per micro-batch, keyed by the batch id in the job description
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Long, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.contains(s"runId = ${q.runId}"))
+          .foreach(d => jobs.merge(d.split("batch = ").last.trim.toLong,
+            1, (a: Integer, b: Integer) => a + b))
+    }
+    // three micro-batches; the last one passes in full
+    val batches = Seq(
+      Seq((1L, "en"), (2L, "zz")),
+      Seq((3L, "en"), (4L, "fr"), (5L, "yy")),
+      Seq((6L, "en"), (7L, "fr")))
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+    finally {
+      q.stop()
+      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    val n = batches.indices.map(b => jobs.getOrDefault(b.toLong, 0).intValue)
+    info(s"jobs per batch: $n")
+    assert(n.drop(1).forall(_ <= 5), s"jobs per batch: $n")
+    val logged = Manifest.load(spark, tmp).collect()
+      .map(r => r.getAs[Int]("partition_id") ->
+        (r.getAs[Long]("n_checked"), r.getAs[Long]("n_failed"))).toMap
+    assert(logged == Map(0 -> (2L, 1L), 1 -> (3L, 1L), 2 -> (2L, 0L)))
   }
 
   test("streaming: kill mid-batch-write, resume — torn output is " +
