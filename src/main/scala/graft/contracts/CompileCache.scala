@@ -20,6 +20,12 @@ package graft.contracts
   * its inputs; only the compile step is amortized, exactly like
   * Janino's generated-class cache.
   *
+  * An entry may also hold what a compile costs to ship: the
+  * `rowFirstViolation` entry keeps the generic first-violation tree
+  * next to its deflated Java serialization
+  * ([[graft.functions.ContractCheck.Generic]]), so the serialize and
+  * deflate run once per compile, not once per query or stage.
+  *
   * Bounded: the key space is the set of distinct (contract, schema)
   * pairs a process validates — a handful in any real run — but a
   * caller minting fresh contract objects per call would grow it, so
@@ -60,12 +66,10 @@ object CompileCache {
     *
     * The cache is process-wide while keys carry no session identity:
     * artifacts built under one session's SQLConf are served to every
-    * session in the JVM. That is sound for the contract trees cached
-    * here (string/struct logic whose folding is conf-independent; all
-    * engine sessions additionally pin UTC), but a future caller
-    * caching conf-SENSITIVE folds (timestamp casts under varying
-    * timezones, ANSI-dependent arithmetic) must add the relevant conf
-    * to its key. */
+    * session in the JVM. A caller whose fold depends on the conf must
+    * put that conf in its key: `rowFirstViolation` keys the session
+    * time zone (timestamp casts) and `spark.sql.ansi.enabled`
+    * (overflow and cast semantics). */
   def memo[A <: AnyRef](key: Any)(build: => A): A =
     Option(m.get(key)).getOrElse {
       val built = build

@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode,
   SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Partition-granular run manifest — the checkpoint-resume log of
   * BASELINE.json `north_rule` ("resumable from checkpoint with
@@ -38,15 +39,31 @@ object Manifest {
 
   def path(outDir: String): String = s"$outDir/_manifest"
 
+  /** the log's rows, empty when the directory is missing or holds no
+    * data file yet (only `_temporary`, say). Reads the files one listing
+    * found, not the directory: Spark treats a root named `_manifest` as
+    * hidden and logs a WARN on every directory read (a glob read logs
+    * one too, with a stack trace). Past Spark's serial-listing threshold
+    * (32 roots by default) a file list would cost a listing job, so a
+    * log of more files is read as the directory, WARN and all. */
   def load(spark: SparkSession, outDir: String): DataFrame = {
-    val p = path(outDir)
-    // existence check through the Hadoop FS — outDir may be HDFS/s3a,
-    // not just a local path
-    val hp = new org.apache.hadoop.fs.Path(p)
+    // listed through the Hadoop FS — outDir may be HDFS/s3a, not just
+    // a local path
+    val hp = new org.apache.hadoop.fs.Path(path(outDir))
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) spark.read.schema(schema).parquet(p)
-    else spark.createDataFrame(
+    val files =
+      try fs.listStatus(hp).toSeq.collect {
+        case f if f.isFile && !f.getPath.getName.startsWith("_") &&
+            !f.getPath.getName.startsWith(".") => f.getPath.toString
+      }
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val serialRoots = spark.conf.get(
+      SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key).toInt
+    if (files.isEmpty) spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+    else if (files.size > serialRoots)
+      spark.read.schema(schema).parquet(hp.toString)
+    else spark.read.schema(schema).parquet(files: _*)
   }
 
   /** what resume needs from the log, read in one pass.

@@ -1,12 +1,15 @@
 package graft.functions
 
 import graft.contracts.{Compiler, Contract, Frame, MsgEnv, ObjectC}
+import org.apache.spark.SparkConf
+import org.apache.spark.serializer.JavaSerializer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, InterpretedProjection, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Codegen'd first-violation check for an ARBITRARY contract: the one
@@ -28,18 +31,29 @@ import org.apache.spark.sql.types._
   *    bit-identical to the generic plan (asserted by the
   *    fast-vs-generic property suite).
   *
+  * What ships: `child`, `plan` and a [[ContractCheck.Generic]] — the
+  * generic tree (~14k nodes, ~1 MB Java-serialized) travels as its
+  * deflated serialization (~70 KB), and an executor decodes it on the
+  * first failing row of a task, so a task with no failing row never
+  * does. On the driver the holder keeps the live tree (constant
+  * folding and driver-side eval never decode). The plan string is
+  * `contractcheck(<child>)`: neither tree is printed.
+  *
   * `child` is never null at the call sites (a `struct(*)` of the row,
   * or a required-guarded column); a null child short-circuits to null
   * (= pass) via the UnaryExpression default.
   */
 case class ContractCheck(child: Expression, plan: VNode,
-                         generic: Expression) extends UnaryExpression {
+                         generic: ContractCheck.Generic)
+    extends UnaryExpression {
 
   override def dataType: DataType = Compiler.violType
   override def nullable: Boolean = true
 
+  override protected def stringArgs: Iterator[Any] = Iterator(child)
+
   @transient private lazy val genericProj =
-    new InterpretedProjection(Seq(generic))
+    new InterpretedProjection(Seq(generic.expr))
   @transient private lazy val rowHolder = new GenericInternalRow(1)
   @transient private lazy val slotHolder = new GenericInternalRow(1)
 
@@ -497,6 +511,44 @@ case class ContractCheck(child: Expression, plan: VNode,
 
 object ContractCheck {
 
+  /** The bound generic first-violation expression as it ships: only
+    * its Java serialization, deflated, is written (`driverExpr` is
+    * transient). `expr` is the driver's tree where it was built and is
+    * decoded from the bytes, once per deserialized copy, wherever it
+    * was shipped to — through Spark's `JavaSerializer`, which resolves
+    * classes with the context class loader like task deserialization
+    * does. Equality and hash follow the bytes, so plans that carry the
+    * same compile compare equal. */
+  final class Generic private[functions] (@transient driverExpr: Expression)
+      extends Serializable {
+    private val bytes: Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream
+      val s = serializer.serializeStream(
+        new java.util.zip.DeflaterOutputStream(out))
+      try s.writeObject(driverExpr) finally s.close()
+      out.toByteArray
+    }
+
+    @transient lazy val expr: Expression =
+      if (driverExpr != null) driverExpr
+      else {
+        val s = serializer.deserializeStream(
+          new java.util.zip.InflaterInputStream(
+            new java.io.ByteArrayInputStream(bytes)))
+        try s.readObject[Expression]() finally s.close()
+      }
+
+    @transient private lazy val hash = java.util.Arrays.hashCode(bytes)
+    override def hashCode: Int = hash
+    override def equals(o: Any): Boolean = o match {
+      case g: Generic => (g eq this) || java.util.Arrays.equals(bytes, g.bytes)
+      case _ => false
+    }
+  }
+
+  private def serializer =
+    new JavaSerializer(new SparkConf(false)).newInstance()
+
   /** Row-level first violation through the codegen'd verdict: the whole
     * row (as a struct) is checked by the compiled verdict program;
     * failing rows delegate to the generic compile for bit-identical
@@ -511,16 +563,20 @@ object ContractCheck {
     val rowType = StructType(df.schema.fields)
     implicit val env: MsgEnv = MsgEnv(thing, contract)
     // the verdict program AND the bound generic expression are pure
-    // functions of (contract, schema, thing) — deterministic immutable
-    // trees whose construction pays per-leaf probe analyses plus a
-    // full optimizer constant-fold of the message scaffolding
-    // (bindRowProbe), i.e. serial driver CPU per query construction.
-    // Memoized since round 6 ([[graft.contracts.CompileCache]] — the
-    // compile amortizes like Janino's codegen cache; results are
-    // still computed fresh per action).
-    val (plan, bound) = graft.contracts.CompileCache.memo(
+    // functions of (contract, schema, thing, session time zone, ANSI
+    // mode: the last two decide how the probe folds casts and
+    // arithmetic) — deterministic immutable trees whose construction
+    // pays per-leaf probe analyses plus a full optimizer constant-fold
+    // of the message scaffolding (bindRowProbe), i.e. serial driver CPU
+    // per query construction. Memoized since round 6
+    // ([[graft.contracts.CompileCache]] — the compile amortizes like
+    // Janino's codegen cache; results are still computed fresh per
+    // action), together with the generic tree's shipped bytes.
+    val (plan, generic) = graft.contracts.CompileCache.memo(
       ("rowFirstViolation", new graft.contracts.CompileCache.IdRef(
-        contract), rowType, thing)) {
+        contract), rowType, thing,
+        spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key),
+        spark.conf.get(SQLConf.ANSI_ENABLED.key))) {
       val p = VerdictCompiler.buildRow(contract, rowType)
       // no size cap: doGenCode hoists composite nodes past
       // SplitLeafThreshold leaves into their own generated methods, so
@@ -537,10 +593,10 @@ object ContractCheck {
           .toIndexedSeq: _*)))
       val b = VerdictCompiler.bindRowProbe(
         probe.select(genericCol.as("__gv__")), rowType)
-      (p, b)
+      (p, new Generic(b))
     }
     val rowStruct = struct(df.columns.toSeq.map(col): _*)
     GraftColumnBridge.column(ContractCheck(
-      GraftColumnBridge.expression(rowStruct), plan, bound))
+      GraftColumnBridge.expression(rowStruct), plan, generic))
   }
 }

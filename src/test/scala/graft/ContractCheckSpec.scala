@@ -4,8 +4,11 @@ import graft.contracts._
 import graft.engine.{SpanDocs, Validate}
 import graft.functions.{ContractCheck, VNode, VerdictCompiler}
 import graft.gen.SpanGen
+import org.apache.spark.serializer.JavaSerializer
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression}
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -107,6 +110,59 @@ class ContractCheckSpec extends SparkTestBase {
     assert(first.exists(_.contains("lambda_variable")))
     assert(first == source())
     docs.unpersist()
+  }
+
+  /** the analyzed `ContractCheck` of a `rowFirstViolation` over `df` */
+  private def contractCheckOf(df: DataFrame): ContractCheck =
+    df.select(ContractCheck.rowFirstViolation(df, SpanDocs.contract))
+      .queryExecution.analyzed.expressions
+      .flatMap(_.collect { case cc: ContractCheck => cc }).head
+
+  private def javaSerializer =
+    new JavaSerializer(spark.sparkContext.getConf).newInstance()
+
+  test("the flagship plan string prints neither the verdict program nor " +
+       "the generic tree") {
+    val docs = SpanGen.docs(spark, 200, 2).cache()
+    val media = SpanGen.media(spark, 100).cache()
+    val plan = SpanDocs.validateAll(docs, media).queryExecution
+      .explainString(FormattedMode)
+    info(s"explain(formatted): ${plan.length} chars")
+    assert(plan.contains("contractcheck(struct("))
+    assert(plan.length < 64 * 1024)
+    docs.unpersist(); media.unpersist()
+  }
+
+  test("the flagship ContractCheck serializes under 200 KiB") {
+    val bytes = javaSerializer.serialize(
+      contractCheckOf(SpanGen.docs(spark, 10, 1))).limit()
+    info(s"Java-serialized ContractCheck: $bytes bytes")
+    assert(bytes < 200 * 1024)
+  }
+
+  test("a shipped ContractCheck decodes the generic tree and yields the " +
+       "driver's payloads on failing rows, interpreted") {
+    val docs = SpanGen.docs(spark, 400, 2, defects = SpanGen.Defects(
+      nullKind = true, badKind = true, negOffset = true, rate = 20)).cache()
+    val driver = BindReferences.bindReference(contractCheckOf(docs),
+      docs.queryExecution.analyzed.output)
+    val ser = javaSerializer
+    val shipped = ser.deserialize[ContractCheck](ser.serialize(driver))
+    assert(shipped == driver && shipped.semanticHash() == driver.semanticHash())
+    def payload(cc: ContractCheck, row: InternalRow): Any =
+      CatalystTypeConverters.convertToScala(cc.eval(row), Compiler.violType)
+    val failing = docs.queryExecution.executedPlan.executeCollect()
+      .filter(driver.eval(_) != null)
+    assert(failing.nonEmpty)
+    failing.foreach(r => assert(payload(shipped, r) == payload(driver, r)))
+    docs.unpersist()
+  }
+
+  test("two rowFirstViolation columns of one compile are equal and hash " +
+       "alike") {
+    val docs = SpanGen.docs(spark, 10, 1)
+    val (a, b) = (contractCheckOf(docs), contractCheckOf(docs))
+    assert(a == b && a.semanticHash() == b.semanticHash())
   }
 
   test("anchored ASCII regexes decided on bytes ≡ java.util.regex find") {

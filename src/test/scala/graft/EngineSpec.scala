@@ -581,6 +581,35 @@ class EngineSpec extends SparkTestBase {
       Manifest.State(completedDef("b"), fpsDef, seqDef))
   }
 
+  test("a manifest directory that holds only _temporary loads empty") {
+    val out = Files.createTempDirectory("graft-mtemp").toString
+    val staged = java.nio.file.Paths.get(Manifest.path(out), "_temporary",
+      "0", "part-00000.parquet")
+    Files.createDirectories(staged.getParent)
+    Files.write(staged, Array[Byte](1, 2, 3)) // not parquet: never read
+    val m = Manifest.load(spark, out)
+    assert(m.columns.toSeq == Manifest.schemaCols)
+    assert(m.count() == 0)
+    assert(Manifest.state(spark, out, Some("a")) ==
+      Manifest.State(Set.empty, Map.empty, 0L))
+  }
+
+  test("a manifest of more files than Spark lists serially reads in as " +
+       "many jobs as a small one") {
+    val out = Files.createTempDirectory("graft-mmany").toString
+    for (k <- 0 until 4)
+      writeManifest(out, withFp = true, Seq(("s", k, "done", k.toLong, "f")))
+    val (few, fewJobs) = jobsOf(Manifest.state(spark, out, Some("s")))
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    spark.conf.set(key, "2")
+    val (many, manyJobs) =
+      try jobsOf(Manifest.state(spark, out, Some("s")))
+      finally spark.conf.unset(key)
+    assert(few.completed == Set(0, 1, 2, 3) && many == few)
+    assert(manyJobs == fewJobs, s"$manyJobs jobs past the threshold, " +
+      s"$fewJobs below it")
+  }
+
   test("a part=k directory whose data files hold zero rows is a " +
        "partition: validated with n_checked = 0") {
     val tmp = Files.createTempDirectory("graft-empty").toString
