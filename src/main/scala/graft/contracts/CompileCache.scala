@@ -6,7 +6,7 @@ package graft.contracts
   *
   * Compiling a contract against a schema is pure driver-side work —
   * per-leaf probe analyses, a full optimizer pass to constant-fold the
-  * message scaffolding (VerdictCompiler.bindRowProbe) — and its result
+  * message scaffolding (VerdictCompiler.bindRow) — and its result
   * is a deterministic, immutable expression tree that depends only on
   * (contract, schema, check name). Re-running it on every query
   * construction re-paid hundreds of milliseconds of serial driver CPU
@@ -82,12 +82,12 @@ object CompileCache {
 
   /** Analyze + optimize `c` ONCE against `rowType` (empty-RDD probe —
     * PropagateEmptyRelation cannot prove a LogicalRDD empty, so the
-    * projection survives intact; the VerdictCompiler.bindRowProbe
+    * projection survives intact; the VerdictCompiler.bindRow
     * precedent) and hand back the FOLDED expression as a reusable
     * Column with its attribute references re-unresolved by name.
     *
     * Why: generic-compiler trees carry literal frame/message
-    * scaffolding that constant-folds from MBs to KBs — bindRowProbe
+    * scaffolding that constant-folds from MBs to KBs — bindRow
     * measured 64 MB analyzed vs 158 KB optimized on a 350-leaf
     * contract. Without this, EVERY query invocation re-pays Catalyst
     * analysis + optimization walks over the unfolded tree (serial

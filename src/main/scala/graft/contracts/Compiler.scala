@@ -480,6 +480,18 @@ object Compiler {
     coalesceAll(strictViol +: checks)
   }
 
+  /** [[objectViols]] of a whole row: `o`'s fields bound to the
+    * top-level columns of `rowType`, the row rendered as a struct —
+    * the generic row-level compile. */
+  private[graft] def rowViols(o: ObjectC, rowType: StructType,
+                              f: Frame = Frame.root)
+                             (implicit env: MsgEnv): Column =
+    objectViols(o, rowType, col, f, rowRender(rowType))
+
+  /** [[render]] of a whole row of `rowType`, as a struct */
+  private[graft] def rowRender(rowType: StructType): Column =
+    render(rowType, struct(rowType.fieldNames.toSeq.map(col): _*))
+
   /** ``Field `x` required, got <render of the object>`` — raised at the
     * OBJECT's level (the reference fails before pushing the field frame,
     * contract.impl.js:653-660), so message frames come from the object's

@@ -52,20 +52,14 @@ object Uniqueness {
     * key into a single window partition — the north_rule's named skew
     * case. Null keys survive via the null-safe join condition (`<=>`
     * hashes null like a value; a plain equi-join would drop them).
-    * `broadcastDups`: None = AQE decides from runtime size (default),
-    * Some(true) = force broadcast, Some(false) = leave to the shuffle
-    * join (AQE skew-split applies if the dup set itself is huge). */
+    * AQE picks the join from the duplicate set's runtime size: a
+    * broadcast when it is small, else a shuffle join (skew-split if
+    * the duplicate set itself is huge). */
   def violations(df: DataFrame, keyCol: String, thing: String = "data",
-                 saltBuckets: Int = 0,
-                 broadcastDups: Option[Boolean] = None): DataFrame = {
+                 saltBuckets: Int = 0): DataFrame = {
     val dups = duplicates(df, keyCol, saltBuckets)
       .select(col(keyCol).as("_dup_key"))
-    val dim = broadcastDups match {
-      case Some(true) => broadcast(dups)
-      case Some(false) => dups.hint("shuffle_merge")
-      case None => dups // AQE decides from its size estimate
-    }
-    df.join(dim, col(keyCol) <=> col("_dup_key"), "inner")
+    df.join(dups, col(keyCol) <=> col("_dup_key"), "inner")
       .select(
         col(keyCol).cast("string").as("doc_id"),
         lit("." + keyCol).as("path"),

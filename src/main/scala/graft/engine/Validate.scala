@@ -3,7 +3,6 @@ package graft.engine
 import graft.contracts._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Canonical violation row — errors become *data*, not exceptions
   * (SURVEY.md §2.6; ContractError fields, contract-errors.js:124-231). */
@@ -44,8 +43,7 @@ object Validate {
                      thing: String = "data",
                      withFullValue: Boolean = false): Column = {
     implicit val env: MsgEnv = msgEnv(df, contract, thing, withFullValue)
-    Compiler.objectViols(contract, df.schema, f => col(f), Frame.root,
-      rowRender(df))
+    Compiler.rowViols(contract, df.schema)
   }
 
   /** first violation through the codegen'd verdict compiler
@@ -58,14 +56,51 @@ object Validate {
                          thing: String = "data"): Column =
     graft.functions.ContractCheck.rowFirstViolation(df, contract, thing)
 
-  private def rowRender(df: DataFrame): Column =
-    Compiler.render(StructType(df.schema.fields),
-      struct(df.columns.toSeq.map(col): _*))
-
   private def msgEnv(df: DataFrame, contract: ObjectC, thing: String,
                      withFullValue: Boolean): MsgEnv =
     MsgEnv(thing, contract.render,
-      if (withFullValue) Some(rowRender(df)) else None)
+      if (withFullValue) Some(Compiler.rowRender(df.schema)) else None)
+
+  /** the rows of `df` whose first violation `v` is not null, `v` as `_v` */
+  private def failing(df: DataFrame, v: Column): DataFrame =
+    df.withColumn("_v", v).where(col("_v").isNotNull)
+
+  /** the six canonical violation columns over [[failing]] rows */
+  private def violationCols(idCol: String, contract: Contract)
+                           (implicit env: MsgEnv): Seq[Column] = Seq(
+    col(idCol).cast("string").as("doc_id"),
+    col("_v.path").as("path"),
+    col("_v.expected").as("expected"),
+    col("_v.got").as("got"),
+    lit(contract.render).as("contract_repr"),
+    Compiler.assembleMessage(col("_v")).as("message"))
+
+  /** fail-fast gate: the first row of `firstViolations` (doc_id, path
+    * and message columns) over `df` thrown as a
+    * [[ContractViolationException]]; `df` itself on success.
+    *
+    * The query runs over an RDD ANALYSIS BARRIER, not over `df`'s plan
+    * directly: when the checked frame's columns are themselves large
+    * compiled expressions (a member returning a violations frame),
+    * composing the shape check on top lets the optimizer inline those
+    * expression trees into every probe reference, and the action-time
+    * plan stringification (SQL listener events) then walks a
+    * combinatorially blown-up tree — minutes of driver CPU on toString
+    * alone. Behind the barrier `df`'s plan is a leaf; the probe's own
+    * plan stays probe-sized. The ORIGINAL df is returned for chaining,
+    * so downstream composition/pushdown is unaffected; the barrier
+    * exists only inside this one gate job. */
+  private def throwFirst(df: DataFrame)
+                        (firstViolations: DataFrame => DataFrame)
+      : DataFrame = {
+    val probe = df.sparkSession.createDataFrame(df.rdd, df.schema)
+    val first = firstViolations(probe).limit(1).collect()
+    if (first.nonEmpty)
+      throw new ContractViolationException(
+        first(0).getAs[String]("message"),
+        first(0).getAs[String]("doc_id"), first(0).getAs[String]("path"))
+    df
+  }
 
   /** violations dataset: one row per input row with >= 1 violation,
     * carrying the first violation in canonical traversal order
@@ -87,22 +122,13 @@ object Validate {
     // generic compile — identical by construction); full-value parity
     // mode compiles generically so rootRender threads into or-messages
     val v =
-      if (withFullValue)
-        Compiler.objectViols(contract, df.schema, f => col(f),
-          Frame.root, rowRender(df))
+      if (withFullValue) firstViolation(df, contract, thing, withFullValue)
       else fastFirstViolation(df, contract, thing)
-    val base = df.withColumn("_v", v)
-      .where(col("_v").isNotNull)
-    val core = Seq(
-      col(idCol).cast("string").as("doc_id"),
-      col("_v.path").as("path"),
-      col("_v.expected").as("expected"),
-      col("_v.got").as("got"),
-      lit(contract.render).as("contract_repr"),
-      Compiler.assembleMessage(col("_v")).as("message"))
+    val base = failing(df, v)
+    val core = violationCols(idCol, contract)
     if (!withFullValue) base.select(core: _*)
     else {
-      val full = rowRender(df)
+      val full = Compiler.rowRender(df.schema)
       base.select(core :+
         when(full === col("_v.got"), lit(null))
           .otherwise(full).as("full_value"): _*)
@@ -133,21 +159,10 @@ object Validate {
     * message applies. */
   def checkOrThrow(df: DataFrame, contract: ObjectC, idCol: String,
                    thing: String = "data"): DataFrame = {
-    // same RDD analysis barrier as checkMemberOrThrow: a caller may
-    // gate a frame whose columns are themselves large compiled
-    // expressions, and composing the check directly would let the
-    // optimizer inline those trees into every probe reference (plan
-    // stringification then walks a blown-up tree for minutes).
-    // Full-value mode renders every column anyway, so the barrier
-    // costs no pruning; the ORIGINAL df is returned for chaining.
-    val probe = df.sparkSession.createDataFrame(df.rdd, df.schema)
-    val first = violations(probe, contract, idCol, thing,
-      withFullValue = true).limit(1).collect()
-    if (first.nonEmpty)
-      throw new ContractViolationException(
-        first(0).getAs[String]("message"),
-        first(0).getAs[String]("doc_id"), first(0).getAs[String]("path"))
-    df
+    // full-value mode renders every column anyway, so the analysis
+    // barrier costs no pruning
+    throwFirst(df)(violations(_, contract, idCol, thing,
+      withFullValue = true))
   }
 
   /** wrapped-member enforcement (see [[Publish]]): blame follows the
@@ -197,33 +212,14 @@ object Validate {
         lit("for the `this` argument of the call."))
       case None => Frame.root
     }
-    // The probe runs over an RDD ANALYSIS BARRIER, not the member's
-    // plan directly: when the checked frame's columns are themselves
-    // large compiled expressions (a member returning a violations
-    // frame), composing the shape check on top lets the optimizer
-    // inline the member's expression trees into every probe reference,
-    // and the action-time plan stringification (SQL listener events)
-    // then walks a combinatorially blown-up tree — minutes of driver
-    // CPU on toString alone. Behind the barrier the member's plan is a
-    // leaf; the probe's own plan stays probe-sized. The ORIGINAL df is
-    // returned for chaining, so downstream composition/pushdown is
-    // unaffected; the barrier exists only inside this one gate job.
-    val probe = df.sparkSession.createDataFrame(df.rdd, df.schema)
-    val v = Compiler.objectViols(contract, probe.schema, f => col(f),
-      frame, Compiler.render(StructType(probe.schema.fields),
-        struct(probe.columns.toSeq.map(col): _*)))
-    val id: Column =
-      if (probe.columns.contains(idCol)) col(idCol).cast("string")
-      else lit(null).cast("string") // member may project the id away
-    val first = probe.withColumn("_v", v).where(col("_v").isNotNull)
-      .select(id.as("doc_id"), col("_v.path").as("path"),
-        Compiler.assembleMessage(col("_v")).as("message"))
-      .limit(1).collect()
-    if (first.nonEmpty)
-      throw new ContractViolationException(
-        first(0).getAs[String]("message"),
-        first(0).getAs[String]("doc_id"), first(0).getAs[String]("path"))
-    df
+    throwFirst(df) { probe =>
+      val id: Column =
+        if (probe.columns.contains(idCol)) col(idCol).cast("string")
+        else lit(null).cast("string") // member may project the id away
+      failing(probe, Compiler.rowViols(contract, probe.schema, frame))
+        .select(id.as("doc_id"), col("_v.path").as("path"),
+          Compiler.assembleMessage(col("_v")).as("message"))
+    }
   }
 
   /** single-column convenience: validate one column against any contract */
@@ -235,15 +231,7 @@ object Validate {
       if (withFullValue) Some(Compiler.render(dt, col(colName))) else None)
     val f = Frame.root.push(lit("." + colName),
       lit(s"for the field `$colName` of the object"))
-    val v = Compiler.firstViol(contract, dt, col(colName), f)
-    df.withColumn("_v", v)
-      .where(col("_v").isNotNull)
-      .select(
-        col(idCol).cast("string").as("doc_id"),
-        col("_v.path").as("path"),
-        col("_v.expected").as("expected"),
-        col("_v.got").as("got"),
-        lit(contract.render).as("contract_repr"),
-        Compiler.assembleMessage(col("_v")).as("message"))
+    failing(df, Compiler.firstViol(contract, dt, col(colName), f))
+      .select(violationCols(idCol, contract): _*)
   }
 }

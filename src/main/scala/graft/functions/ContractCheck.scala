@@ -1,14 +1,12 @@
 package graft.functions
 
-import graft.contracts.{Compiler, Contract, Frame, MsgEnv, ObjectC}
+import graft.contracts.{Compiler, MsgEnv, ObjectC}
 import org.apache.spark.SparkConf
 import org.apache.spark.serializer.JavaSerializer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, InterpretedProjection, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral, JavaCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
@@ -16,20 +14,24 @@ import org.apache.spark.sql.types._
   * contract-evaluation path, for every contract/schema pair (the
   * flagship span contract included).
   *
-  * Two halves, parity by construction:
-  *  - the HOT loop only decides pass/fail: `plan` (a
-  *    [[graft.functions.VNode]] verdict program from
+  * It evaluates a row with one of two evaluators, and a failing row
+  * always with the second:
+  *  - the generated VERDICT decides pass/fail in the hot loop: `plan`
+  *    (a [[graft.functions.VNode]] verdict program from
   *    [[VerdictCompiler]]) compiles to straight-line Java — primitive
   *    loops over ArrayData/InternalRow for shapes, inlined generated
   *    code for scalar leaf conditions (bound through
   *    `ctx.currentVars`), and an embedded interpreted eval only for
   *    leaves whose condition contains CodegenFallback subtrees.
-  *  - on a FAILING row (rare at production defect rates) evaluation
-  *    DELEGATES to `generic` — the UNCHANGED generic compiled
+  *  - the GENERIC compile, `generic` — the unchanged generic
   *    first-violation expression, carried bound to slot 0 and evaluated
-  *    interpreted over just that row — so paths/expected/got/ctx are
-  *    bit-identical to the generic plan (asserted by the
-  *    fast-vs-generic property suite).
+  *    interpreted over just one row — builds the payload of a FAILING
+  *    row (rare at production defect rates), so paths/expected/got/ctx
+  *    are bit-identical to the generic plan (asserted by the
+  *    fast-vs-generic property suite). It is also the whole interpreted
+  *    `eval` (when Spark does not generate code, e.g. when the optimizer
+  *    folds literal rows), which therefore agrees with the generated
+  *    path by construction.
   *
   * What ships: `child`, `plan` and a [[ContractCheck.Generic]] — the
   * generic tree (~14k nodes, ~1 MB Java-serialized) travels as its
@@ -57,48 +59,21 @@ case class ContractCheck(child: Expression, plan: VNode,
   @transient private lazy val rowHolder = new GenericInternalRow(1)
   @transient private lazy val slotHolder = new GenericInternalRow(1)
 
-  /** all Leaf/Fallback conditions in traversal order — the stable
-    * index space for interpreted eval and fallback dispatch. */
-  @transient private lazy val leafIndex: Map[VNode, Int] = {
-    val buf = scala.collection.mutable.LinkedHashMap.empty[VNode, Int]
-    def walk(v: VNode): Unit = v match {
-      case l: VNode.Leaf => buf.getOrElseUpdate(l, buf.size)
-      case f: VNode.Fallback => buf.getOrElseUpdate(f, buf.size)
-      case rf: VNode.RowFallback => buf.getOrElseUpdate(rf, buf.size)
-      case VNode.Opt(i) => walk(i)
-      case VNode.AndN(is) => is.foreach(walk)
-      case VNode.OrN(is) => is.foreach(walk)
-      case VNode.Arr(e, _) => walk(e)
-      case VNode.TupArr(is, _, _) => is.foreach(walk)
-      case VNode.TupStruct(is) => is.foreach(x => walk(x._1))
-      case VNode.MapVals(v, _) => walk(v) // was missing: a map-value
-      // leaf with no structurally-equal twin elsewhere in the plan had
-      // no index at all (latent NoSuchElement in eval + codegen dispatch)
-      case VNode.Obj(fs) => fs.foreach(f => walk(f.inner))
-      case VNode.Field(_, _, _, i) => walk(i)
-      case _ => ()
-    }
-    walk(plan)
-    buf.toMap
-  }
-  @transient private lazy val leafExprs: IndexedSeq[Expression] =
-    leafIndex.toSeq.sortBy(_._2).map {
-      case (VNode.Leaf(e), _) => e
-      case (VNode.Fallback(e), _) => e
-      case (VNode.RowFallback(e), _) => e
-      case _ => throw new IllegalStateException("unreachable")
-    }.toIndexedSeq
+  /** the distinct leaf conditions in traversal order — the stable index
+    * space of fallback dispatch. */
+  @transient private lazy val leaves: IndexedSeq[VNode.Cond] =
+    plan.leaves.distinct.toIndexedSeq
 
   /** interpreted FAIL evaluation of leaf condition `i` over `value` —
-    * also the runtime hook the generated code calls for Fallback
-    * leaves. Must be public for codegen access. */
+    * the runtime hook the generated code calls for Fallback leaves.
+    * Must be public for codegen access. */
   def leafFails(i: Int, value: Any): Boolean = {
     slotHolder.update(0, value)
-    leafExprs(i).eval(slotHolder) == true
+    leaves(i).fail.eval(slotHolder) == true
   }
 
-  /** slow path: generic interpreted evaluation of the failing row —
-    * byte-identical violation payloads, never in the hot loop. */
+  /** generic interpreted evaluation of one row — byte-identical
+    * violation payloads, never in the hot loop. */
   def slowPath(value: Any): Any = {
     rowHolder.update(0, value)
     val out = genericProj(rowHolder)
@@ -106,92 +81,7 @@ case class ContractCheck(child: Expression, plan: VNode,
     else out.getStruct(0, Compiler.violType.length).copy()
   }
 
-  // -------------------------------------------------------------------
-  // interpreted verdict (used when the surrounding plan is not
-  // code-generated) — same semantics as the generated loop
-  // -------------------------------------------------------------------
-
-  private def verdict(v: VNode, value: Any, dt: DataType,
-                      root: Any): Boolean =
-    v match {
-      case VNode.PassAlways => true
-      case VNode.FailAlways => false
-      case l: VNode.Leaf => !leafFails(leafIndex(l), value)
-      case f: VNode.Fallback => !leafFails(leafIndex(f), value)
-      case rf: VNode.RowFallback => !leafFails(leafIndex(rf), root)
-      case VNode.Opt(inner) =>
-        value == null || verdict(inner, value, dt, root)
-      case VNode.AndN(items) => items.forall(verdict(_, value, dt, root))
-      case VNode.OrN(items) => items.exists(verdict(_, value, dt, root))
-      case VNode.Arr(elem, et) =>
-        if (value == null) false
-        else {
-          val arr = value.asInstanceOf[ArrayData]
-          val n = arr.numElements()
-          var i = 0; var ok = true
-          while (i < n && ok) {
-            val e = if (arr.isNullAt(i)) null else arr.get(i, et)
-            ok = verdict(elem, e, et, root)
-            i += 1
-          }
-          ok
-        }
-      case VNode.TupArr(items, et, strict) =>
-        if (value == null) false
-        else {
-          val arr = value.asInstanceOf[ArrayData]
-          val n = arr.numElements()
-          if (n < items.size) false
-          else if (strict && n > items.size) false
-          else items.zipWithIndex.forall { case (item, i) =>
-            val e = if (arr.isNullAt(i)) null else arr.get(i, et)
-            verdict(item, e, et, root)
-          }
-        }
-      case VNode.TupStruct(items) =>
-        if (value == null) false
-        else {
-          val row = value.asInstanceOf[InternalRow]
-          items.zipWithIndex.forall { case ((item, fdt), i) =>
-            val e = if (row.isNullAt(i)) null else row.get(i, fdt)
-            verdict(item, e, fdt, root)
-          }
-        }
-      case VNode.Obj(fields) =>
-        if (value == null) false
-        else {
-          val row = value.asInstanceOf[InternalRow]
-          fields.forall { f =>
-            if (f.ordinal < 0) // row-scoped (cross-field) field check
-              verdict(f.inner, null, f.dt, root)
-            else {
-              val isNull = row.isNullAt(f.ordinal)
-              if (isNull) f.optional
-              else verdict(f.inner, row.get(f.ordinal, f.dt), f.dt, root)
-            }
-          }
-        }
-      case f: VNode.Field => throw new IllegalStateException(
-        "Field is only reachable through Obj")
-      case VNode.MapVals(valueNode, vt) =>
-        if (value == null) false
-        else {
-          val m = value.asInstanceOf[MapData]
-          val vals = m.valueArray()
-          val n = vals.numElements()
-          var i = 0; var ok = true
-          while (i < n && ok) {
-            val e = if (vals.isNullAt(i)) null else vals.get(i, vt)
-            ok = verdict(valueNode, e, vt, root)
-            i += 1
-          }
-          ok
-        }
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    if (verdict(plan, input, child.dataType, input)) null
-    else slowPath(input)
+  override def nullSafeEval(input: Any): Any = slowPath(input)
 
   // -------------------------------------------------------------------
   // code generation
@@ -220,29 +110,14 @@ case class ContractCheck(child: Expression, plan: VNode,
     })
   }
 
-  /** leaves under a node — the code-size proxy for method splitting. */
-  private def leafCount(v: VNode): Int = v match {
-    case _: VNode.Leaf | _: VNode.Fallback | _: VNode.RowFallback => 1
-    case VNode.Opt(i) => leafCount(i)
-    case VNode.AndN(is) => is.map(leafCount).sum
-    case VNode.OrN(is) => is.map(leafCount).sum
-    case VNode.Arr(e, _) => leafCount(e)
-    case VNode.TupArr(is, _, _) => is.map(leafCount).sum
-    case VNode.TupStruct(is) => is.map(x => leafCount(x._1)).sum
-    case VNode.MapVals(m, _) => leafCount(m)
-    case VNode.Obj(fs) => fs.map(f => leafCount(f.inner)).sum
-    case VNode.Field(_, _, _, i) => leafCount(i)
-    case _ => 0
-  }
-
-  /** leaves per generated method before hoisting a subtree into its own
-    * function: whole-stage codegen cannot split ONE expression's code
-    * (no INPUT_ROW), so past this many leaves we do it ourselves via
-    * ctx.addNewFunction — each composite node above the threshold
-    * becomes `private boolean check_N(<jt> v, boolean vNull,
-    * InternalRow root)`, recursively, so method size stays bounded for
-    * arbitrarily large contracts (the round-2 build fell back to the
-    * interpreted generic compile past 300 leaves instead). */
+  /** leaves (the code-size proxy) per generated method before hoisting
+    * a subtree into its own function: whole-stage codegen cannot split
+    * ONE expression's code (no INPUT_ROW), so past this many leaves we
+    * do it ourselves via ctx.addNewFunction — each composite node above
+    * the threshold becomes `private boolean check_N(<jt> v, boolean
+    * vNull, InternalRow root)`, recursively, so method size stays
+    * bounded for arbitrarily large contracts (the round-2 build fell
+    * back to the interpreted generic compile past 300 leaves instead). */
   private val SplitLeafThreshold = 40
 
   /** recursion entry: inline small nodes, hoist big composite ones. */
@@ -251,7 +126,7 @@ case class ContractCheck(child: Expression, plan: VNode,
                        res: String, rootVar: String): String = v match {
     case _: VNode.AndN | _: VNode.OrN | _: VNode.Obj | _: VNode.Arr |
          _: VNode.TupArr | _: VNode.TupStruct | _: VNode.MapVals |
-         _: VNode.Opt if leafCount(v) > SplitLeafThreshold =>
+         _: VNode.Opt if v.leaves.size > SplitLeafThreshold =>
       val vParam = ctx.freshName("v")
       val nParam = ctx.freshName("vNull")
       val rootParam = ctx.freshName("root")
@@ -300,7 +175,7 @@ case class ContractCheck(child: Expression, plan: VNode,
        """.stripMargin
 
     case f: VNode.Fallback =>
-      val idx = leafIndex(f)
+      val idx = leaves.indexOf(f)
       val boxed = s"(($isNullCode) ? null : " +
         s"(Object) ${CodeGenerator.boxedType(dt)}.valueOf($valueVar))"
       // boxedType.valueOf works for primitives; object types pass as-is
@@ -310,7 +185,7 @@ case class ContractCheck(child: Expression, plan: VNode,
       s"$res = !$self.leafFails($idx, $arg);"
 
     case rf: VNode.RowFallback =>
-      val idx = leafIndex(rf)
+      val idx = leaves.indexOf(rf)
       s"$res = !$self.leafFails($idx, (Object) $rootVar);"
 
     case VNode.Opt(inner) =>
@@ -567,7 +442,7 @@ object ContractCheck {
     // mode: the last two decide how the probe folds casts and
     // arithmetic) — deterministic immutable trees whose construction
     // pays per-leaf probe analyses plus a full optimizer constant-fold
-    // of the message scaffolding (bindRowProbe), i.e. serial driver CPU
+    // of the message scaffolding (bindRow), i.e. serial driver CPU
     // per query construction. Memoized since round 6
     // ([[graft.contracts.CompileCache]] — the compile amortizes like
     // Janino's codegen cache; results are still computed fresh per
@@ -577,23 +452,16 @@ object ContractCheck {
         contract), rowType, thing,
         spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key),
         spark.conf.get(SQLConf.ANSI_ENABLED.key))) {
-      val p = VerdictCompiler.buildRow(contract, rowType)
       // no size cap: doGenCode hoists composite nodes past
       // SplitLeafThreshold leaves into their own generated methods, so
       // arbitrarily large contracts stay on the codegen verdict (round 2
-      // fell back to the interpreted generic compile past 300 leaves)
-      // generic compile over a probe with the REAL row schema (so
-      // cross-field predicates resolve against siblings, exactly like
-      // Validate.firstViolation), then bound to the row struct in slot 0
-      val probe = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rowType)
-      val genericCol = Compiler.objectViols(contract, rowType,
-        f => col(f), Frame.root,
-        Compiler.render(rowType, struct(rowType.fieldNames.map(col)
-          .toIndexedSeq: _*)))
-      val b = VerdictCompiler.bindRowProbe(
-        probe.select(genericCol.as("__gv__")), rowType)
-      (p, new Generic(b))
+      // fell back to the interpreted generic compile past 300 leaves).
+      // The generic compile is over the REAL row schema (so cross-field
+      // predicates resolve against siblings, exactly like
+      // Validate.firstViolation), bound to the row struct in slot 0.
+      (VerdictCompiler.buildRow(contract, rowType), new Generic(
+        VerdictCompiler.bindRow(Compiler.rowViols(contract, rowType),
+          rowType)))
     }
     val rowStruct = struct(df.columns.toSeq.map(col): _*)
     GraftColumnBridge.column(ContractCheck(

@@ -2,17 +2,17 @@ package graft.functions
 
 import graft.contracts._
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{Alias, ArrayAggregate, AttributeReference, BoundReference, Expression, Literal, RLike}
+import org.apache.spark.sql.catalyst.expressions.{Alias, ArrayAggregate, AttributeReference, BoundReference, Expression, GetStructField, Literal, RLike, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** A verdict program: the PASS/FAIL half of a contract compiled against
   * a concrete schema, as a serializable tree that
-  * [[graft.functions.ContractCheck]] can both interpret and compile to
-  * a tight Java loop (doGenCode per node).
+  * [[graft.functions.ContractCheck]] compiles to a tight Java loop
+  * (doGenCode per node). It is never interpreted: where Spark does not
+  * generate code, ContractCheck evaluates the generic compile instead.
   *
   * Why this exists: the generic [[graft.contracts.Compiler]] expresses
   * shape recursion with higher-order functions (`transform`,
@@ -31,19 +31,43 @@ import org.apache.spark.sql.types._
   * expression, so payloads stay bit-identical (asserted by the
   * fast-vs-generic property test).
   */
-sealed trait VNode extends Serializable
+sealed trait VNode extends Serializable {
+  import VNode._
+
+  /** the nodes directly under this one, in evaluation order */
+  def children: Seq[VNode] = this match {
+    case Opt(i) => Seq(i)
+    case AndN(is) => is
+    case OrN(is) => is
+    case Arr(e, _) => Seq(e)
+    case TupArr(is, _, _) => is
+    case TupStruct(is) => is.map(_._1)
+    case Field(_, _, _, i) => Seq(i)
+    case Obj(fs) => fs
+    case MapVals(v, _) => Seq(v)
+    case PassAlways | FailAlways | _: Cond => Nil
+  }
+
+  /** the fail conditions under this node, in traversal order */
+  def leaves: Iterator[Cond] = this match {
+    case c: Cond => Iterator(c)
+    case _ => children.iterator.flatMap(_.leaves)
+  }
+}
 object VNode {
   /** value always passes (any) */
   case object PassAlways extends VNode
   /** value always fails (nothing; schema-contradicted gates;
     * schema-missing required fields; strict extras) */
   case object FailAlways extends VNode
+  /** a leaf: a fail condition bound to slot 0 */
+  sealed trait Cond extends VNode { def fail: Expression }
   /** scalar leaf: codegen-able fail condition bound to slot 0 */
-  final case class Leaf(fail: Expression) extends VNode
+  final case class Leaf(fail: Expression) extends Cond
   /** fail condition containing CodegenFallback subtrees (HOF preds
     * other than code-generatable `aggregate` folds, which bind as
     * [[ArrayFold]]): evaluated interpreted against a one-slot row */
-  final case class Fallback(fail: Expression) extends VNode
+  final case class Fallback(fail: Expression) extends Cond
   /** optional: null passes, else inner */
   final case class Opt(inner: VNode) extends VNode
   final case class AndN(items: Seq[VNode]) extends VNode
@@ -70,70 +94,35 @@ object VNode {
     * references sibling columns (`n_chars = length(text)`) cannot bind
     * to its own value alone, so its entire top-level field check is
     * evaluated against the root row instead. */
-  final case class RowFallback(fail: Expression) extends VNode
+  final case class RowFallback(fail: Expression) extends Cond
 }
 
 object VerdictCompiler {
   import VNode._
 
   /** signals a leaf predicate that references columns outside its own
-    * value (cross-field) — the row-level builder catches it and wraps
+    * value (cross-field) — the row-level object catches it and wraps
     * the whole top-level field as a [[VNode.RowFallback]]. */
   private class CrossFieldPred(val cause: Throwable)
       extends RuntimeException(cause)
 
-  /** compile a ROW-level contract: like the ObjectC case of [[build]],
-    * but each top-level field that contains a cross-field predicate is
-    * compiled as a RowFallback over the full row (single-field generic
-    * first-violation, bound to the row struct). */
+  /** compile a ROW-level contract over the row schema to a verdict
+    * program: [[build]] at the row level, where each top-level field
+    * that contains a cross-field predicate compiles as a RowFallback
+    * over the full row (single-field generic first-violation, bound to
+    * the row struct). */
   def buildRow(o: ObjectC, rowType: StructType)
-              (implicit spark: SparkSession): VNode = {
-    val extra =
-      o.isStrict && rowType.fieldNames.exists(!o.fields.keySet(_))
-    val missingRequired = o.fields.exists { case (fname, fc) =>
-      !rowType.fieldNames.contains(fname) && !isOptional(fc)
-    }
-    if (extra || missingRequired) FailAlways
-    else Obj(o.fields.toSeq.flatMap { case (fname, fc) =>
-      val ord = rowType.fieldNames.indexOf(fname)
-      if (ord < 0) None
-      else {
-        val fdt = rowType.fields(ord).dataType
-        val opt = isOptional(fc)
-        try {
-          val inner =
-            if (opt) build(peel(fc), fdt) else build(fc, fdt)
-          Some(Field(ord, fdt, opt, inner))
-        } catch {
-          case _: CrossFieldPred =>
-            // whole field check (required gate + inner contract) over
-            // the row — cross-field references resolve against siblings
-            implicit val env: MsgEnv = MsgEnv("data", o)
-            val cond = Compiler.objectViols(
-              graft.contracts.C.obj(fname -> fc), rowType,
-              f => col(f), Frame.root, Compiler.render(rowType,
-                org.apache.spark.sql.functions.struct(
-                  rowType.fieldNames.map(col).toIndexedSeq: _*)))
-              .isNotNull
-            val probe = spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              rowType)
-            // ordinal -1: row-scoped — the Obj evaluator hands the
-            // ROOT row to the inner RowFallback (required gate and all
-            // semantics live inside the compiled condition)
-            Some(Field(-1, fdt, optional = false,
-              RowFallback(bindRowProbe(probe.select(cond.as("c")),
-                rowType))))
-        }
-      }
-    })
-  }
+              (implicit spark: SparkSession): VNode =
+    build(o, rowType, row = true)
 
   /** compile (contract, schema) to a verdict program. Driver-side:
     * leaf conditions are analyzed through a probe projection and bound
-    * to BoundReference(0) so they serialize to executors. */
-  def build(c: Contract, dt: DataType)
-           (implicit spark: SparkSession): VNode = c match {
+    * to BoundReference(0) so they serialize to executors. `row` marks
+    * the row-level object, the only one that catches a cross-field
+    * predicate; below it one escalates to the enclosing top-level
+    * field. */
+  private def build(c: Contract, dt: DataType, row: Boolean = false)
+                   (implicit spark: SparkSession): VNode = c match {
     case AnyC => PassAlways
     case Renamed(inner, _) => build(inner, dt)
     case fr: ForwardRefC => build(fr.resolved, dt)
@@ -172,9 +161,21 @@ object VerdictCompiler {
           else {
             val fdt = st.fields(ord).dataType
             val opt = isOptional(fc)
-            val inner = if (opt) buildFieldInner(peel(fc), fdt)
-                        else buildFieldInner(fc, fdt)
-            Some(Field(ord, fdt, opt, inner))
+            // a NULL on a required field fails at the Field node, so
+            // the field's own contract needs no required gate
+            try Some(Field(ord, fdt, opt,
+              build(if (opt) peel(fc) else fc, fdt)))
+            catch {
+              case _: CrossFieldPred if row =>
+                // whole field check (required gate + inner contract)
+                // over the row — cross-field references resolve against
+                // siblings. Ordinal -1: row-scoped — the Obj node hands
+                // the ROOT row to the inner RowFallback
+                implicit val env: MsgEnv = MsgEnv("data", o)
+                Some(Field(-1, fdt, optional = false, RowFallback(bindRow(
+                  Compiler.rowViols(C.obj(fname -> fc), st).isNotNull,
+                  st))))
+            }
           }
         })
       case _ =>
@@ -184,15 +185,14 @@ object VerdictCompiler {
         fallbackFor(c, dt)
     }
     case leaf =>
-      val probe = probeDf(dt)
       Compiler.leafFail(leaf, dt, col("x")) match {
         case None => fallbackFor(leaf, dt)
         case Some(cond) =>
           val bound =
-            try bindProbe(probe.select(cond.as("c")), dt)
+            try bindProbe(cond, dt)
             catch {
               // cross-field predicate: the condition references
-              // sibling columns — escalate to the row-level builder
+              // sibling columns — escalate to the row-level object
               case e: org.apache.spark.sql.AnalysisException =>
                 throw new CrossFieldPred(e)
             }
@@ -205,13 +205,6 @@ object VerdictCompiler {
           }
       }
   }
-
-  /** field values are checked by the field's contract directly; a NULL
-    * on a required field fails at the Field node, so inner never needs
-    * its own required gate. */
-  private def buildFieldInner(fc: Contract, dt: DataType)
-                             (implicit spark: SparkSession): VNode =
-    build(fc, dt)
 
   private def peel(c: Contract): Contract = c match {
     case OptionalC(inner) => inner
@@ -229,45 +222,48 @@ object VerdictCompiler {
   private def fallbackFor(c: Contract, dt: DataType)
                          (implicit spark: SparkSession): VNode = {
     implicit val env: MsgEnv = MsgEnv("data", c)
-    val probe = probeDf(dt)
-    val cond = Compiler.firstViol(c, dt, col("x"), Frame.root).isNotNull
-    Fallback(bindProbe(probe.select(cond.as("c")), dt))
+    Fallback(bindProbe(
+      Compiler.firstViol(c, dt, col("x"), Frame.root).isNotNull, dt))
   }
 
-  private def probeDf(dt: DataType)(implicit spark: SparkSession) =
+  /** an empty frame of `schema` to analyze probe projections over */
+  private def probe(schema: StructType)(implicit spark: SparkSession) =
     spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("x", dt))))
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  /** analyze a single-column projection and bind its `x` reference to
-    * slot 0 (the holder row the verdict evaluates leaves against). */
-  private def bindProbe(proj: org.apache.spark.sql.DataFrame,
-                        dt: DataType): Expression = {
-    val analyzed = proj.queryExecution.analyzed
-    val resolved = analyzed.asInstanceOf[Project].projectList.head match {
+  /** the one expression a probe projection computes, its column
+    * references replaced by `bind` and its RuntimeReplaceable nodes by
+    * their replacements (interpreted eval can't see them; the optimizer
+    * rewrites them, but an analyzed probe bypasses it). */
+  private def bindProjection(plan: LogicalPlan)
+                            (bind: AttributeReference => Expression)
+      : Expression = {
+    val resolved = plan.asInstanceOf[Project].projectList.head match {
       case a: Alias => a.child
       case other => other
     }
-    resolved.transform {
-      case ar: AttributeReference => BoundReference(0, dt, nullable = true)
-    }.transformUp {
-      // interpreted eval can't see RuntimeReplaceable (normally
-      // rewritten by the optimizer, which the probe bypasses)
-      case rr: org.apache.spark.sql.catalyst.expressions.RuntimeReplaceable
-        => rr.replacement
-    }.transformUp {
+    resolved.transform { case ar: AttributeReference => bind(ar) }
+      .transformUp { case rr: RuntimeReplaceable => rr.replacement }
+  }
+
+  /** analyze `cond`, a condition over a column `x` of type `dt`, and
+    * bind `x` to slot 0 (the holder row the verdict evaluates leaves
+    * against). */
+  private def bindProbe(cond: Column, dt: DataType)
+                       (implicit spark: SparkSession): Expression =
+    bindProjection(probe(StructType(Seq(StructField("x", dt))))
+      .select(cond.as("c")).queryExecution.analyzed)(
+      _ => BoundReference(0, dt, nullable = true)).transformUp {
       // `aggregate` folds (CodegenFallback in Spark) as generated loops;
       // anchored ASCII regexes as byte loops
       case agg: ArrayAggregate => ArrayFold.lower(agg).getOrElse(agg)
       case r: RLike => AsciiRegex.lower(r).getOrElse(r)
     }
-  }
 
-  /** analyze a projection over the full row schema and bind every
-    * column reference to its field of the row struct in slot 0. */
-  def bindRowProbe(proj: org.apache.spark.sql.DataFrame,
-                   rowType: StructType): Expression = {
-    import org.apache.spark.sql.catalyst.expressions.GetStructField
+  /** optimize `c`, a column over the row schema, and bind every column
+    * reference to its field of the row struct in slot 0. */
+  private[functions] def bindRow(c: Column, rowType: StructType)
+                                (implicit spark: SparkSession): Expression =
     // bind the OPTIMIZED projection, not the analyzed one: constant
     // folding collapses the literal frame/message scaffolding (paths,
     // frame text, rendered contract strings) that dominates the
@@ -278,18 +274,9 @@ object VerdictCompiler {
     // empty, so the projection survives optimization intact. This is
     // the same optimizer pass the generic DataFrame path ships through,
     // so delegated payloads stay bit-identical (property-asserted).
-    val analyzed = proj.queryExecution.optimizedPlan
-    val resolved = analyzed.asInstanceOf[Project].projectList.head match {
-      case a: Alias => a.child
-      case other => other
+    bindProjection(probe(rowType).select(c.as("c"))
+      .queryExecution.optimizedPlan) { ar =>
+      GetStructField(BoundReference(0, rowType, nullable = true),
+        rowType.fieldIndex(ar.name), Some(ar.name))
     }
-    resolved.transform {
-      case ar: AttributeReference =>
-        GetStructField(BoundReference(0, rowType, nullable = true),
-          rowType.fieldIndex(ar.name), Some(ar.name))
-    }.transformUp {
-      case rr: org.apache.spark.sql.catalyst.expressions.RuntimeReplaceable
-        => rr.replacement
-    }
-  }
 }

@@ -22,28 +22,22 @@ class ContractCheckSpec extends SparkTestBase {
 
   /** row-by-row equality of the fast and generic first-violation.
     * Codegen is forced (CODEGEN_ONLY) so a fast path that silently
-    * fell back to interpretation would fail the test; `interpreted`
-    * instead forces the interpreted verdict (no codegen at all). `df`
-    * is cached first: over literal rows (`fix`) the optimizer would
-    * fold the verdict to a constant with interpreted eval, and the
-    * generated code would never run. */
+    * fell back to interpretation would fail the test (interpreted eval
+    * IS the generic compile). `df` is cached first: over literal rows
+    * (`fix`) the optimizer would fold the check to a constant with
+    * interpreted eval, and the generated code would never run. */
   private def assertEquivalent(data: DataFrame, c: ObjectC,
-                               expectSomeViol: Boolean = true,
-                               interpreted: Boolean = false): Unit = {
+                               expectSomeViol: Boolean = true): Unit = {
     val df = data.cache()
     val generic = df.select(Validate.firstViolation(df, c).as("v"))
       .collect()
-    val forced =
-      if (interpreted) Seq("spark.sql.codegen.wholeStage" -> "false",
-        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-      else Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
-    val saved = forced.map { case (k, _) => k -> spark.conf.getOption(k) }
-    forced.foreach { case (k, v) => spark.conf.set(k, v) }
+    val key = "spark.sql.codegen.factoryMode"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "CODEGEN_ONLY")
     val fast =
       try df.select(ContractCheck.rowFirstViolation(df, c).as("v"))
         .collect()
-      finally saved.foreach { case (k, v) =>
-        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     assert(generic.length == fast.length)
     generic.zip(fast).foreach { case (g, f) =>
       assert(g == f, s"fast-path divergence:\n  generic=$g\n  fast=$f")
@@ -86,7 +80,6 @@ class ContractCheckSpec extends SparkTestBase {
       .map { case (id, spans) => fix(s"'doc-$id' as doc_id, $spans as spans") }
     val all = handBuilt.foldLeft(docs)(_ unionByName _)
     assertEquivalent(all, SpanDocs.contract)
-    assertEquivalent(all, SpanDocs.contract, interpreted = true)
   }
 
   test("flagship span contract compiles with no interpreted leaf " +
@@ -207,7 +200,6 @@ class ContractCheckSpec extends SparkTestBase {
       aggregate(xs, lit(0L), (acc, x) => acc + x) < 5))
     assert(fallbacks(sum, df).isEmpty)
     assertEquivalent(df, sum)
-    assertEquivalent(df, sum, interpreted = true)
     val doubled = C.obj("xs" -> C.pred("doubled sum below 10")(xs =>
       aggregate(xs, lit(0L), (acc, x) =>
         acc + element_at(transform(array(x), y => y * 2), 1)) < 10))
@@ -229,7 +221,38 @@ class ContractCheckSpec extends SparkTestBase {
     Seq(window, swap).foreach { c =>
       assert(fallbacks(c, pairs).isEmpty)
       assertEquivalent(pairs, c)
-      assertEquivalent(pairs, c, interpreted = true)
+    }
+  }
+
+  test("a Fallback leaf holding a generated fold next to a `transform` " +
+       "runs the fold's interpreted eval; ≡ generic") {
+    val df = Seq("array(1L, 2L)", "array(3L, 4L)", "array()",
+        "cast(null as array<bigint>)", "array(1L, cast(null as bigint))")
+      .map(xs => fix(s"cast($xs as array<bigint>) as xs"))
+      .reduce(_ unionByName _)
+    val c = C.obj("xs" -> C.pred("sum plus length below 7")(xs =>
+      aggregate(xs, lit(0L), (acc, x) => acc + x) +
+        size(transform(xs, y => y * 2)) < 7))
+    val fb = fallbacks(c, df)
+    assert(fb.nonEmpty)
+    assert(fb.exists { case VNode.Fallback(e) =>
+      e.exists(_.isInstanceOf[graft.functions.ArrayFold]) })
+    assertEquivalent(df, c)
+  }
+
+  test("an uncached literal row, where the optimizer folds the " +
+       "ContractCheck, yields the generic payload") {
+    val c = C.obj("xs" -> C.array(C.integer), "s" -> C.oneOf("a", "b"))
+    Seq("array(1, 2) as xs, 'a' as s", "array(1, 2) as xs, 'c' as s",
+        "array(1, cast(null as int)) as xs, 'a' as s",
+        "cast(null as array<int>) as xs, 'b' as s").foreach { row =>
+      val df = fix(row)
+      val q = df.select(ContractCheck.rowFirstViolation(df, c).as("v"))
+      assert(!q.queryExecution.optimizedPlan.expressions
+        .exists(_.exists(_.isInstanceOf[ContractCheck])), row)
+      assert(q.collect().toSeq ==
+        df.select(Validate.firstViolation(df, c).as("v")).collect().toSeq,
+        row)
     }
   }
 
