@@ -15,8 +15,11 @@ import org.apache.spark.sql.functions._
   * known-small catalogs so a 100 TB fact side never shuffles;
   * `Some(false)` forbids it (sort-merge/shuffled-hash), for skew-prone
   * or barely-fitting dimensions. The dimension is projected to its key
-  * column *before* the join (and distinct-ed) so whatever strategy wins
-  * ships only keys.
+  * column *before* the join so whatever strategy wins ships only keys.
+  * The projection is distinct-ed only for the shuffle strategies, where
+  * fewer rows cross the exchange: an anti join only asks whether a key
+  * exists, so a broadcast side may repeat keys, and its `distinct`
+  * would cost a shuffle of the whole dimension on every call.
   */
 object Referential {
 
@@ -26,11 +29,11 @@ object Referential {
   def dangling(fact: DataFrame, fkCol: String, dim: DataFrame,
                pkCol: String,
                broadcastDim: Option[Boolean] = None): DataFrame = {
-    val keys0 = dim.select(col(pkCol).as(fkCol)).distinct()
+    val keys0 = dim.select(col(pkCol).as(fkCol))
     val keys = broadcastDim match {
       case Some(true) => broadcast(keys0)
-      case Some(false) => keys0.hint("shuffle_merge")
-      case None => keys0 // AQE decides from its size estimate
+      case Some(false) => keys0.distinct().hint("shuffle_merge")
+      case None => keys0.distinct() // AQE decides from its size estimate
     }
     fact.where(col(fkCol).isNotNull).join(keys, Seq(fkCol), "left_anti")
   }

@@ -20,9 +20,10 @@ import org.apache.spark.sql.functions._
   * `maxParts` caps how many partitions one invocation processes — the
   * hook the kill/resume test uses to simulate a mid-job crash.
   *
-  * Global (cross-partition) doc_id uniqueness runs as a separate
-  * incremental pass over per-partition key counts; at 10¹² rows the
-  * per-partition pass bounds memory and the merge is key-count-sized.
+  * doc_id uniqueness is checked within each partition only. `init`
+  * co-locates a doc_id's copies by hashing `doc_id` into `part`; a
+  * layout partitioned any other way (by date, say) can hold one doc_id
+  * in two partitions, and no run reports it.
   */
 object Runner {
 
@@ -197,10 +198,10 @@ object Runner {
     * violations write (`observe` metrics ride the write job for free).
     * Measured on `init`'s layout (2000 docs, 4 partitions): the write,
     * the distinct-failing-docs read-back and the manifest append cost
-    * nine jobs a partition (AQE runs each shuffle and broadcast stage as
-    * its own job); a first run into an empty `outDir` adds two set-up
-    * jobs (11 for one partition, 20 for two), and a resume of two
-    * partitions runs 22 jobs (four set-up jobs: the docs and media
+    * seven jobs a partition (AQE runs each shuffle and broadcast stage
+    * as its own job); a first run into an empty `outDir` adds two
+    * set-up jobs (9 for one partition, 16 for two), and a resume of two
+    * partitions runs 18 jobs (four set-up jobs: the docs and media
     * schema merges and the manifest aggregate's two stages).
     *
     * Partitions are processed `spark.graft.runner.concurrency`-way

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Uniqueness / duplicate-key detection (the `doc_id` uniqueness check of
@@ -14,6 +14,9 @@ import org.apache.spark.sql.functions._
   * phase 1 nearly free; for skewed keys it bounds the largest reduce
   * partition by n_hot/saltBuckets. AQE skew handling covers joins but NOT
   * groupBy skew, hence the explicit salt (SURVEY.md §4.2).
+  *
+  * Violation rows are rendered from that aggregate and repeated per
+  * copy ([[violations]]); the fact is never joined back.
   */
 object Uniqueness {
 
@@ -39,37 +42,61 @@ object Uniqueness {
     counts.where(col("n_dups") > 1)
   }
 
+  /** most rows one generator array holds, or one generated explode
+    * buffers, when a duplicated key's row is repeated */
+  private val Chunk = 4096L
+
   /** duplicate rows as violations: every row whose key is duplicated,
     * reported in the reference's violation shape.
     *
-    * Count-join shape, skew-proof by construction: [[duplicates]]
-    * reduces the fact to the duplicated-key set first — map-side
-    * partial aggregation collapses even a billion-row hot key to one
-    * partial per map task, so the only full pass over the fact is the
-    * join back, and that side never shuffles when AQE broadcasts the
-    * (almost always tiny) duplicate-key set. The round-2 window-count
-    * alternative shuffled the ENTIRE fact by key and serialized a hot
-    * key into a single window partition — the north_rule's named skew
-    * case. Null keys survive via the null-safe join condition (`<=>`
-    * hashes null like a value; a plain equi-join would drop them).
-    * AQE picks the join from the duplicate set's runtime size: a
-    * broadcast when it is small, else a shuffle join (skew-split if
-    * the duplicate set itself is huge). */
+    * Aggregate-then-repeat: every column of a uniqueness row is a
+    * function of the key alone, so the rows come from [[duplicates]]
+    * without touching the fact again. Its map-side partials collapse
+    * even a billion-row hot key to one partial per map task, so the
+    * aggregate is the only pass over the fact. Each duplicated key's
+    * row is rendered once, then repeated `n_dups` times by explodes in
+    * runs of at most `Chunk²`, then `Chunk`, then one row per copy, so
+    * no array holds more than `Chunk` elements below `Chunk³` copies of
+    * a key. A null key groups like a value, so a duplicated NULL key
+    * still yields its rows.
+    *
+    * The local sort of the runs is where the generated stage yields:
+    * Spark's generated explode buffers every row it makes from one
+    * input row, so explodes fused straight onto the aggregate would
+    * buffer all of a hot key's copies at once. After the sort the last
+    * explode buffers one run.
+    *
+    * Replaces the count-join shape, which joined the duplicate-key set
+    * back onto the fact: a third scan of the key column and, when the
+    * planner sized the duplicate set as the whole key column, a
+    * shuffle of it before AQE switched to a broadcast. The trade: a
+    * hot key's copies come out of the one task that owns its aggregate
+    * row instead of the fact's scan tasks. */
   def violations(df: DataFrame, keyCol: String, thing: String = "data",
                  saltBuckets: Int = 0): DataFrame = {
-    val dups = duplicates(df, keyCol, saltBuckets)
-      .select(col(keyCol).as("_dup_key"))
-    df.join(dups, col(keyCol) <=> col("_dup_key"), "inner")
+    val key = col(keyCol)
+    val rendered = duplicates(df, keyCol, saltBuckets)
       .select(
-        col(keyCol).cast("string").as("doc_id"),
+        key.cast("string").as("doc_id"),
         lit("." + keyCol).as("path"),
         lit(s"unique `$keyCol`").as("expected"),
-        col(keyCol).cast("string").as("got"),
+        key.cast("string").as("got"),
         lit(s"unique($keyCol)").as("contract_repr"),
         concat(lit(s"check on `$thing` failed: Expected unique `$keyCol`, " +
           s"but got duplicate "),
           // a duplicated NULL key must still render a message (concat
           // null-propagates); util.inspect renders null as 'null'
-          coalesce(col(keyCol).cast("string"), lit("null"))).as("message"))
+          coalesce(key.cast("string"), lit("null"))).as("message"),
+        col("n_dups").as("_left"))
+    // `_left` copies split into runs: `_at` is a run's offset
+    Seq(Chunk * Chunk, Chunk)
+      .foldLeft(rendered) { (d, run) => d
+        .withColumn("_at", explode(sequence(lit(0L), col("_left") - 1,
+          lit(run))))
+        .withColumn("_left", least(col("_left") - col("_at"), lit(run)))
+      }
+      .sortWithinPartitions("_at")
+      .withColumn("_at", explode(sequence(lit(1L), col("_left"))))
+      .drop("_left", "_at")
   }
 }

@@ -96,6 +96,33 @@ class SpanDocsSpec extends SparkTestBase {
       _.getString(5).endsWith("got duplicate null")))
   }
 
+  test("uniqueness violations ≡ the join of the duplicate set back onto " +
+       "the fact, as a multiset, salted and not") {
+    // a key duplicated across more than one repeat run, a duplicated
+    // NULL key and a unique key, over four map tasks
+    val df = spark.range(0, 10003, 1, 4).select(
+      when(col("id") < 10000, lit("doc-hot"))
+        .when(col("id") < 10002, lit(null).cast("string"))
+        .otherwise(lit("doc-once")).as("doc_id"))
+    val k = col("doc_id")
+    for (salt <- Seq(0, 8)) {
+      val dups = Uniqueness.duplicates(df, "doc_id", salt)
+        .select(k.as("_dup_key"))
+      val joined = df.join(dups, k <=> col("_dup_key"), "inner").select(
+        k.cast("string").as("doc_id"), lit(".doc_id").as("path"),
+        lit("unique `doc_id`").as("expected"), k.cast("string").as("got"),
+        lit("unique(doc_id)").as("contract_repr"),
+        concat(lit("check on `docs` failed: Expected unique `doc_id`, " +
+          "but got duplicate "), coalesce(k.cast("string"), lit("null")))
+          .as("message"))
+      val viols = Uniqueness.violations(df, "doc_id", "docs", salt)
+      assert(viols.columns.toSeq == joined.columns.toSeq)
+      assert(viols.count() == 10002, s"salt=$salt")
+      assert(viols.exceptAll(joined).isEmpty &&
+        joined.exceptAll(viols).isEmpty, s"salt=$salt")
+    }
+  }
+
   test("uniqueness violations: planted hot key is skew-proof — " +
        "count-join shape (no Window), fact side broadcast-joined") {
     // the north_rule's named skew case: one crawler-grade doc_id

@@ -182,6 +182,11 @@ class SurfaceSpec extends SparkTestBase {
       graft.engine.Referential.danglingViaKeys(fact, "fk", dim, "pk"))
     assert(base == Set(2L, 6L))
     assert(viaKeys == base)
+    // a forced broadcast ships the dimension's keys without distinct:
+    // repeated dimension keys change no anti-join row
+    val dupDim = Seq("a", "c", "a", "c", "c").toDF("pk")
+    assert(ids(graft.engine.Referential.dangling(fact, "fk", dupDim, "pk",
+      Some(true))) == base)
   }
 
   // --- forwardRef (contract.impl.js:484-511) ---
