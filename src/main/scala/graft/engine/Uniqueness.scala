@@ -66,12 +66,12 @@ object Uniqueness {
     * buffer all of a hot key's copies at once. After the sort the last
     * explode buffers one run.
     *
-    * Replaces the count-join shape, which joined the duplicate-key set
-    * back onto the fact: a third scan of the key column and, when the
-    * planner sized the duplicate set as the whole key column, a
-    * shuffle of it before AQE switched to a broadcast. The trade: a
-    * hot key's copies come out of the one task that owns its aggregate
-    * row instead of the fact's scan tasks. */
+    * Joining the duplicate-key set back onto the fact instead costs a
+    * second scan of the key column, a broadcast job and, when the
+    * planner sizes the duplicate set as the whole key column, a shuffle
+    * of it before AQE switches to the broadcast. The trade: a hot key's
+    * copies come out of the one task that owns its aggregate row, not
+    * out of the fact's scan tasks. */
   def violations(df: DataFrame, keyCol: String, thing: String = "data",
                  saltBuckets: Int = 0): DataFrame = {
     val key = col(keyCol)

@@ -477,9 +477,9 @@ class EngineSpec extends SparkTestBase {
       docs.count(); media.count()
       val (n, jobs) = jobsOf(SpanDocs.validateAll(docs, media).count())
       assert(n > 0)
-      // the uniqueness aggregate's shuffle stage, the catalog broadcast
-      // and the result (a join back onto docs and a distinct catalog
-      // shuffle ran 6)
+      // 4: the uniqueness exchange, the catalog broadcast, the count's
+      // exchange and the result (a join back onto docs and a distinct
+      // catalog shuffle ran 6)
       info(s"validateAll ran $jobs jobs")
       assert(jobs <= 4, s"validateAll ran $jobs jobs")
     } finally { docs.unpersist(); media.unpersist() }

@@ -120,6 +120,10 @@ class SpanDocsSpec extends SparkTestBase {
       assert(viols.count() == 10002, s"salt=$salt")
       assert(viols.exceptAll(joined).isEmpty &&
         joined.exceptAll(viols).isEmpty, s"salt=$salt")
+      // a local sort sits below the last explode: the stage's yield
+      // point, without which a key's copies are all buffered at once
+      val plan = viols.queryExecution.executedPlan.toString
+      assert(plan.indexOf("Generate") < plan.indexOf("Sort"), plan)
     }
   }
 
