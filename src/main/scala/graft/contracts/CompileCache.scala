@@ -6,7 +6,7 @@ package graft.contracts
   *
   * Compiling a contract against a schema is pure driver-side work —
   * per-leaf probe analyses, a full optimizer pass to constant-fold the
-  * message scaffolding (VerdictCompiler.bindRow) — and its result
+  * message scaffolding (VerdictCompiler.fold) — and its result
   * is a deterministic, immutable expression tree that depends only on
   * (contract, schema, check name). Re-running it on every query
   * construction re-paid hundreds of milliseconds of serial driver CPU
@@ -79,39 +79,4 @@ object CompileCache {
   /** tests/diagnostics. */
   def size: Int = m.size
   def clear(): Unit = m.clear()
-
-  /** Analyze + optimize `c` ONCE against `rowType` (empty-RDD probe —
-    * PropagateEmptyRelation cannot prove a LogicalRDD empty, so the
-    * projection survives intact; the VerdictCompiler.bindRow
-    * precedent) and hand back the FOLDED expression as a reusable
-    * Column with its attribute references re-unresolved by name.
-    *
-    * Why: generic-compiler trees carry literal frame/message
-    * scaffolding that constant-folds from MBs to KBs — bindRow
-    * measured 64 MB analyzed vs 158 KB optimized on a 350-leaf
-    * contract. Without this, EVERY query invocation re-pays Catalyst
-    * analysis + optimization walks over the unfolded tree (serial
-    * driver CPU); folded once and memoized, the per-query passes walk
-    * kilobytes. The fold is the same optimizer the real plan ships
-    * through anyway, so results are unchanged by construction. */
-  def foldedColumn(spark: org.apache.spark.sql.SparkSession,
-                   rowType: org.apache.spark.sql.types.StructType,
-                   c: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
-    import org.apache.spark.sql.catalyst.plans.logical.Project
-    val probe = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rowType)
-    val plan = probe.select(c.as("__folded__"))
-      .queryExecution.optimizedPlan
-    val resolved = plan.asInstanceOf[Project].projectList.head match {
-      case a: Alias => a.child
-      case other => other
-    }
-    val unresolved = resolved.transform {
-      case ar: AttributeReference => UnresolvedAttribute.quoted(ar.name)
-    }
-    org.apache.spark.sql.GraftColumnBridge.column(unresolved)
-  }
 }

@@ -19,14 +19,12 @@ object ViolationOps {
     val rowCol = struct(df.columns.toSeq.map(col): _*)
     // the collect-all expression is a pure function of
     // (contract, schema, thing) — memoized AND constant-folded once
-    // (see graft.contracts.CompileCache.foldedColumn: per-query
-    // Catalyst passes then walk the KB-sized folded tree, not the
-    // MB-sized scaffolding)
-    val vs = graft.contracts.CompileCache.memo(
-      ("allViols", new graft.contracts.CompileCache.IdRef(contract),
-        rowType, thing))(
-      graft.contracts.CompileCache.foldedColumn(df.sparkSession, rowType,
-        Compiler.allViols(contract, rowType, rowCol, Frame.root)))
+    // (see graft.functions.VerdictCompiler.foldedColumn)
+    val vs = CompileCache.memo(
+      ("allViols", new CompileCache.IdRef(contract), rowType, thing))(
+      graft.functions.VerdictCompiler.foldedColumn(
+        Compiler.allViols(contract, rowType, rowCol, Frame.root),
+        rowType)(df.sparkSession))
     df.withColumn("_vs", vs)
       .where(size(col("_vs")) > 0)
       .select(col(idCol).cast("string").as("doc_id"),

@@ -1,7 +1,8 @@
 package graft.functions
 
 import graft.contracts._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Alias, ArrayAggregate, AttributeReference, BoundReference, Expression, GetStructField, Literal, RLike, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
@@ -260,23 +261,39 @@ object VerdictCompiler {
       case r: RLike => AsciiRegex.lower(r).getOrElse(r)
     }
 
-  /** optimize `c`, a column over the row schema, and bind every column
-    * reference to its field of the row struct in slot 0. */
+  /** optimize `c`, a column over `rowType`, and rebind its column
+    * references with `bind`. The OPTIMIZED projection, not the analyzed
+    * one: constant folding collapses the literal frame/message
+    * scaffolding (paths, frame text, rendered contract strings) that
+    * dominates the analyzed tree — measured 64 MB analyzed vs 158 KB
+    * optimized on a 350-leaf contract, i.e. the difference between a
+    * 69 MB task binary deserialized per task and a negligible one. The
+    * probe is a LogicalRDD (emptyRDD), which PropagateEmptyRelation
+    * cannot prove empty, so the projection survives optimization
+    * intact. This is the same optimizer pass the generic DataFrame path
+    * ships through, so delegated payloads stay bit-identical
+    * (property-asserted). */
+  private[graft] def fold(c: Column, rowType: StructType)
+                         (bind: AttributeReference => Expression)
+                         (implicit spark: SparkSession): Expression =
+    bindProjection(probe(rowType).select(c.as("c"))
+      .queryExecution.optimizedPlan)(bind)
+
+  /** [[fold]] `c`, binding every column reference to its field of the
+    * row struct in slot 0. */
   private[functions] def bindRow(c: Column, rowType: StructType)
                                 (implicit spark: SparkSession): Expression =
-    // bind the OPTIMIZED projection, not the analyzed one: constant
-    // folding collapses the literal frame/message scaffolding (paths,
-    // frame text, rendered contract strings) that dominates the
-    // analyzed tree — measured 64 MB analyzed vs 158 KB optimized on a
-    // 350-leaf contract, i.e. the difference between a 69 MB task
-    // binary deserialized per task and a negligible one. The probe is a
-    // LogicalRDD (emptyRDD), which PropagateEmptyRelation cannot prove
-    // empty, so the projection survives optimization intact. This is
-    // the same optimizer pass the generic DataFrame path ships through,
-    // so delegated payloads stay bit-identical (property-asserted).
-    bindProjection(probe(rowType).select(c.as("c"))
-      .queryExecution.optimizedPlan) { ar =>
+    fold(c, rowType) { ar =>
       GetStructField(BoundReference(0, rowType, nullable = true),
         rowType.fieldIndex(ar.name), Some(ar.name))
     }
+
+  /** [[fold]] `c` into a reusable Column whose references are
+    * re-unresolved by name, so a memoized fold serves every DataFrame
+    * of schema `rowType`: per-query Catalyst passes then walk the
+    * KB-sized folded tree, not the MB-sized scaffolding. */
+  private[graft] def foldedColumn(c: Column, rowType: StructType)
+                                 (implicit spark: SparkSession): Column =
+    GraftColumnBridge.column(
+      fold(c, rowType)(ar => UnresolvedAttribute.quoted(ar.name)))
 }

@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   *    shuffle is bounded by Σ df(gram)²; correct but quadratic in hot
   *    grams, so it is the AUDIT path. At scale run minhashLsh (candidates
   *    from banded signatures, exact verify on candidates only).
-  *  - minhash: signatures/bands are pure SQL expressions (xxhash64 under
-  *    HOF lambdas — codegen'd, no UDF); band join keys are 64-bit hashes
-  *    so bucket skew is hash-bounded.
+  *  - minhash: signatures/bands are compiled expressions (xxhash64
+  *    draws, codegen'd, no UDF); band join keys are 64-bit hashes so
+  *    bucket skew is hash-bounded.
   *  - simhash: 64-bit signature from token hashes; near-dup pairs via
   *    4×16-bit band join (guarantees recall for Hamming distance ≤ 3) +
   *    bit_count verify.
@@ -29,21 +29,6 @@ object Dedup {
     df.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("n_dups"), min(col(idCol)).as("first_id"))
       .where(col("n_dups") > 1)
-
-  /** distinct word n-grams from a PRE-SPLIT token-array column — the
-    * composable HOF form, retained as the independent semantics oracle
-    * for [[graft.functions.NgramShingles]] (NgramSpec proves them
-    * array-equal). HOF lambdas are interpreted with NO common-
-    * subexpression elimination, so callers must bind the token array
-    * to its own column first (inlining `split(text)` would re-split
-    * per element_at — measured 10x slowdown), and even bound it costs
-    * ~40x the compiled expression at n=8. */
-  def tokenNgramsFromTokens(toks: Column, n: Int): Column =
-    when(size(toks) < n, array().cast("array<string>"))
-      .otherwise(array_distinct(transform(
-        sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ",
-          (1 to n).map(j => element_at(toks, i + j)): _*))))
 
   /** projects (idCol as id, grams) via the compiled
     * [[graft.functions.NgramShingles]] expression (25 s → 0.6 s per
@@ -130,15 +115,10 @@ object Dedup {
       .select("id_a", "id_b", "common", "sz_a", "sz_b", "jaccard")
   }
 
-  /** MinHash signature: for each of `numHashes` seeded hash functions,
-    * the min over the document's shingle hashes — pure SQL HOFs. ONE
-    * definition shared with the streaming path
-    * ([[graft.streaming.StatefulDedup]]): the gram string is hashed
-    * once and the seeded draws re-hash the 8-byte value, exactly as
-    * [[minhashLshPairs]]'s compiled form (PipelineSpec pins all
-    * three forms equal) — so batch and streaming signatures for the
-    * same document stay comparable, and both skip re-hashing the gram
-    * text numHashes times.
+  /** MinHash+LSH near-dup pairs: banded signature buckets generate
+    * candidates; exact Jaccard (array_intersect on the true shingle
+    * sets) verifies — so precision is exact and only recall depends on
+    * the (bands × rows) sensitivity curve.
     *
     * SIGNATURE FORMAT v2 (round 5; advisor note): the draw changed
     * from `xxhash64(gram, seed)` to `xxhash64(xxhash64(gram), seed)`
@@ -149,16 +129,6 @@ object Dedup {
     * state rather than failing. Version-tag persisted signature
     * schemas (or drop checkpoints written by the v1 formula) when
     * upgrading across it. */
-  def minhashSignature(grams: Column, numHashes: Int): Column = {
-    val hashed = transform(grams, g => xxhash64(g))
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      s => array_min(transform(hashed, h => xxhash64(h, s))))
-  }
-
-  /** MinHash+LSH near-dup pairs: banded signature buckets generate
-    * candidates; exact Jaccard (array_intersect on the true shingle
-    * sets) verifies — so precision is exact and only recall depends on
-    * the (bands × rows) sensitivity curve. */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       n: Int = 3, numHashes: Int = 64, bands: Int = 16,
                       threshold: Double = 0.8): DataFrame = {

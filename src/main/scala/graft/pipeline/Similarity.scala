@@ -36,32 +36,18 @@ object Similarity {
     * and sorted every pair; the aggregate's exchange carries ≤ k rows
     * per (id, map task)). Order parity with the window form —
     * (cosine desc nulls-last, neighbor asc), NaN-greatest, signed zero
-    * collapsed — is the aggregate's audited contract, and
-    * [[cosineTopKWindow]] keeps the window form as the structurally
-    * independent ranking twin (PipelineSpec pins row-identity; the
-    * DuckDB oracle replays `row_number()` independently either way). */
+    * collapsed — is the aggregate's audited contract; PipelineSpec
+    * pins row-identity with the window form, and the DuckDB oracle
+    * replays `row_number()` independently either way. */
   def cosineTopK(df: DataFrame, idCol: String, vecCol: String,
                  k: Int = 3): DataFrame =
     rankTopK(cosineAllPairs(df, idCol, vecCol), k)
 
-  /** the pre-round-6 window form of [[cosineTopK]] — retained as the
-    * structurally independent audit twin of the bounded-aggregate
-    * ranking (window ≡ aggregate pinned in PipelineSpec). */
-  private[graft] def cosineTopKWindow(df: DataFrame, idCol: String,
-                                      vecCol: String,
-                                      k: Int = 3): DataFrame = {
-    val pairs = cosineAllPairs(df, idCol, vecCol)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("id")
-      .orderBy(col("cosine").desc, col("neighbor").asc)
-    pairs.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("id", "rank", "neighbor", "cosine")
-  }
-
-  /** all (id, neighbor, cosine) pairs, id ≠ neighbor — the shared exact
-    * candidate generator of both [[cosineTopK]] forms. */
-  private def cosineAllPairs(df: DataFrame, idCol: String,
-                             vecCol: String): DataFrame = {
+  /** all (id, neighbor, cosine) pairs, id ≠ neighbor — the exact
+    * candidate generator of [[cosineTopK]] and of its window-ranked
+    * test twin. */
+  private[graft] def cosineAllPairs(df: DataFrame, idCol: String,
+                                    vecCol: String): DataFrame = {
     val v = df.select(col(idCol).as("id"), col(vecCol).as("vec"),
       norm(col(vecCol)).as("nrm"))
     v.as("a").join(v.as("b"), col("a.id") =!= col("b.id"))

@@ -123,8 +123,9 @@ object TextAnalysis {
     * same definition verbatim — no staging needed.
     *
     * The token array is bound once per doc in its own projection (HOF
-    * lambdas have no common-subexpression elimination — see
-    * [[Dedup.tokenNgramsFromTokens]]); one narrow pass, no shuffle. */
+    * lambdas have no common-subexpression elimination, so an inlined
+    * `split(text)` would re-split per element); one narrow pass, no
+    * shuffle. */
   def repetition(df: DataFrame, idCol: String, textCol: String)
       : DataFrame = {
     val bound = df.select(col(idCol).as("id"),

@@ -190,13 +190,12 @@ object StatefulDedup {
     val tsCols = tsCol.toSeq.map(_ => col("ts"))
     // COMPILED shingle + signature pipeline (round 6): NgramShingles →
     // per-gram xxhash64 (XxhashArray) → row-local MinhashSig — the
-    // exact value chain of the batch path, replacing the interpreted
-    // HOF forms (tokenNgramsFromTokens is ~40× the compiled walk at
-    // n=8; minhashSignature re-hashes per seed). Signature values are
-    // IDENTICAL (PipelineSpec pins expression ≡ aggregate ≡ HOF from
-    // the same grams; NgramSpec pins the shinglers array-equal), so
-    // streaming stays comparable with batch and with v2-format
-    // persisted state.
+    // exact value chain of the batch path (the interpreted HOF forms
+    // are ~40× the compiled shingler at n=8 and re-hash per seed).
+    // Signature values are IDENTICAL (PipelineSpec pins expression ≡
+    // aggregate ≡ its HOF twin from the same grams; NgramSpec pins the
+    // shingler ≡ its HOF twin), so streaming stays comparable with
+    // batch and with v2-format persisted state.
     val grams = stream.select(Seq(col(idCol).cast("string").as("id"),
       graft.functions.XxhashArray.hashed(
         graft.functions.NgramShingles.ngrams(col(textCol), n))

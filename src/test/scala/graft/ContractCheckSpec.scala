@@ -2,7 +2,7 @@ package graft
 
 import graft.contracts._
 import graft.engine.{SpanDocs, Validate}
-import graft.functions.{ContractCheck, VNode, VerdictCompiler}
+import graft.functions.{ContractCheck, RaisingGeneric, VNode, VerdictCompiler}
 import graft.gen.SpanGen
 import org.apache.spark.serializer.JavaSerializer
 import org.apache.spark.sql.DataFrame
@@ -23,9 +23,13 @@ class ContractCheckSpec extends SparkTestBase {
   /** row-by-row equality of the fast and generic first-violation.
     * Codegen is forced (CODEGEN_ONLY) so a fast path that silently
     * fell back to interpretation would fail the test (interpreted eval
-    * IS the generic compile). `df` is cached first: over literal rows
-    * (`fix`) the optimizer would fold the check to a constant with
-    * interpreted eval, and the generated code would never run. */
+    * IS the generic compile). The fast column's generic tree raises
+    * where it passes ([[graft.functions.RaisingGeneric]]): a row the
+    * generated verdict fails but the generic compile passes would
+    * otherwise come out null, like a pass. `df` is cached first: over
+    * literal rows (`fix`) the optimizer would fold the check to a
+    * constant with interpreted eval, and the generated code would never
+    * run. */
   private def assertEquivalent(data: DataFrame, c: ObjectC,
                                expectSomeViol: Boolean = true): Unit = {
     val df = data.cache()
@@ -35,8 +39,8 @@ class ContractCheckSpec extends SparkTestBase {
     val saved = spark.conf.getOption(key)
     spark.conf.set(key, "CODEGEN_ONLY")
     val fast =
-      try df.select(ContractCheck.rowFirstViolation(df, c).as("v"))
-        .collect()
+      try df.select(RaisingGeneric(ContractCheck.rowFirstViolation(df, c))
+          .as("v")).collect()
       finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     assert(generic.length == fast.length)
     generic.zip(fast).foreach { case (g, f) =>

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.NgramShingles
-import graft.pipeline.Dedup
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** NgramShingles (compiled shingler) ≡ the composable HOF form it
@@ -11,13 +11,23 @@ class NgramSpec extends SparkTestBase {
 
   import spark.implicits._
 
-  /** the previous implementation, kept in Dedup as the semantics
-    * oracle: split + transform + concat_ws + array_distinct. */
+  /** distinct word n-grams from a PRE-SPLIT token-array column — the
+    * composable HOF form NgramShingles replaced, kept as its semantics
+    * oracle: transform + concat_ws + array_distinct. HOF lambdas have
+    * no common-subexpression elimination, so the token array is bound
+    * to its own column first (an inlined `split(text)` would re-split
+    * per element_at). */
+  private def tokenNgramsFromTokens(toks: Column, n: Int): Column =
+    when(size(toks) < n, array().cast("array<string>"))
+      .otherwise(array_distinct(transform(
+        sequence(lit(0), size(toks) - n),
+        i => concat_ws(" ",
+          (1 to n).map(j => element_at(toks, i + j)): _*))))
+
   private def hofGrams(df: org.apache.spark.sql.DataFrame,
                        n: Int): Seq[(Long, Seq[String])] =
     df.select(col("doc_id").as("id"), split(col("text"), " ").as("toks"))
-      .select(col("id"),
-        Dedup.tokenNgramsFromTokens(col("toks"), n).as("grams"))
+      .select(col("id"), tokenNgramsFromTokens(col("toks"), n).as("grams"))
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1).toList).toSeq
 

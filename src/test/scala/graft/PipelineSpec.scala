@@ -1,6 +1,8 @@
 package graft
 
 import graft.pipeline._
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Pipeline-operator tests: LSH recall vs exact baselines, simhash
@@ -502,6 +504,27 @@ class PipelineSpec extends SparkTestBase {
     }
   }
 
+  /** MinHash signature as pure SQL HOFs — the semantics twin of
+    * [[graft.functions.MinhashSig]]: the gram string is hashed once and
+    * each of `numHashes` seeded draws re-hashes the 8-byte value. */
+  private def minhashSignature(grams: Column, numHashes: Int): Column = {
+    val hashed = transform(grams, g => xxhash64(g))
+    transform(sequence(lit(0), lit(numHashes - 1)),
+      s => array_min(transform(hashed, h => xxhash64(h, s))))
+  }
+
+  /** the window form of [[Similarity.cosineTopK]]'s ranking — the
+    * structurally independent twin of the bounded aggregate. */
+  private def cosineTopKWindow(df: DataFrame, idCol: String,
+                               vecCol: String, k: Int): DataFrame = {
+    val w = Window.partitionBy("id")
+      .orderBy(col("cosine").desc, col("neighbor").asc)
+    Similarity.cosineAllPairs(df, idCol, vecCol)
+      .withColumn("rank", row_number().over(w))
+      .where(col("rank") <= k)
+      .select("id", "rank", "neighbor", "cosine")
+  }
+
   test("MinhashSig expression ≡ explode+min aggregate ≡ streaming HOF " +
        "signature (same docs, every seed)") {
     // round 6 moved the batch signature pass to the row-local compiled
@@ -524,7 +547,7 @@ class PipelineSpec extends SparkTestBase {
     val viaHof = Dedup.withNgrams(docs, "doc_id", "text", 3)
       .where(size(col("grams")) > 0)
       .select(col("id"),
-        Dedup.minhashSignature(col("grams"), nh).as("sig"))
+        minhashSignature(col("grams"), nh).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(viaExpr == viaHof, "expression diverged from HOF signature")
   }
@@ -539,8 +562,7 @@ class PipelineSpec extends SparkTestBase {
     for (k <- Seq(1, 3)) {
       val viaAgg = Similarity.cosineTopK(emb, "vec_id", "embedding", k)
         .orderBy("id", "rank").collect().toSeq
-      val viaWin = Similarity.cosineTopKWindow(emb, "vec_id",
-          "embedding", k)
+      val viaWin = cosineTopKWindow(emb, "vec_id", "embedding", k)
         .orderBy("id", "rank").collect().toSeq
       assert(viaAgg.map(_.toString) == viaWin.map(_.toString),
         s"k=$k: bounded-aggregate cosineTopK diverged from window twin")

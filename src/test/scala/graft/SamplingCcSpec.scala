@@ -107,6 +107,24 @@ class SamplingCcSpec extends SparkTestBase {
     assert(sFast == sDist, "string ids diverged")
   }
 
+  test("connected components: a 1,024-node chain converges within " +
+       "maxIter = 2·⌈log₂ 1024⌉ = 20 distributed star rounds") {
+    // large-star/small-star needs O(log chain length) rounds; label
+    // propagation would need ~1,023. A round count that grew with the
+    // chain would stop at maxIter with the chain split into several
+    // components, so the forced distributed rows would differ from the
+    // union-find fast path's (maxIter = 1 shows that they do)
+    val df = (1L until 1024L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    def rows(cc: org.apache.spark.sql.DataFrame) =
+      cc.orderBy("id").collect().toSeq
+    val fast = rows(Dedup.connectedComponents(df))
+    assert(fast.size == 1024 && fast.forall(_.getLong(1) == 1L))
+    assert(rows(Dedup.connectedComponents(df, maxIter = 20,
+      localMaxEdges = -1L)) == fast, "chain needed more than 20 rounds")
+    assert(rows(Dedup.connectedComponents(df, maxIter = 1,
+      localMaxEdges = -1L)) != fast, "one round cannot span the chain")
+  }
+
   test("canonicalPerComponent: best score wins, least-id tie-break") {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
     val comps = Dedup.connectedComponents(pairs)

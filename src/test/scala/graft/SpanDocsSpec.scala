@@ -4,6 +4,12 @@ import graft.contracts._
 import graft.engine._
 import graft.gen.SpanGen
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExecBase
 import org.apache.spark.sql.functions._
 
 /** End-to-end span-table goldens (FIXTURES.md §1): deterministic
@@ -128,23 +134,36 @@ class SpanDocsSpec extends SparkTestBase {
   }
 
   test("uniqueness violations: planted hot key is skew-proof — " +
-       "count-join shape (no Window), fact side broadcast-joined") {
+       "aggregate-then-repeat shape (one doc_id shuffle, no join)") {
     // the north_rule's named skew case: one crawler-grade doc_id
-    // repeated across half the corpus. The window-count shape would
-    // shuffle all n rows and serialize the hot key into ONE partition;
-    // the count-join shape reduces to the dup-key set first (map-side
-    // partials) and broadcast-joins it back — no fact shuffle at all.
+    // repeated across half the corpus. A window count would shuffle all
+    // n rows and serialize the hot key into ONE partition; a join of
+    // the duplicate set back onto the fact would scan it twice. The
+    // rows come from the doc_id aggregate alone (its map-side partials
+    // collapse the hot key per map task), repeated per copy.
     val n = 200000L
     val df = spark.range(0, n, 1, 8).select(
       when(col("id") % 2 === 0, lit("doc-hot"))
         .otherwise(concat(lit("u-"), col("id"))).as("doc_id"))
     val viols = Uniqueness.violations(df, "doc_id")
-    assert(viols.count() == n / 2)
-    val plan = viols.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), s"hot key back in a window:\n$plan")
-    assert(plan.contains("BroadcastHashJoin") ||
-      plan.contains("AdaptiveSparkPlan"),
-      s"expected dup-set broadcast (or AQE to pick it):\n$plan")
+    assert(viols.collect().length == n / 2)
+    val adaptive = viols.queryExecution.executedPlan
+      .asInstanceOf[AdaptiveSparkPlanExec]
+    assert(adaptive.isFinalPlan)
+    val plan = adaptive.executedPlan
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val shown = plan.treeString
+    assert(aqe.collect(plan) { case w: WindowExecBase => w }.isEmpty,
+      s"hot key back in a window:\n$shown")
+    assert(aqe.collect(plan) { case j: BaseJoinExec => j }.isEmpty,
+      s"duplicate set joined back onto the fact:\n$shown")
+    val shuffles = aqe.collect(plan) { case e: ShuffleExchangeLike => e }
+    val keys = shuffles.map(_.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), _) => a.name
+      case other => other.toString
+    })
+    assert(keys == Seq("doc_id"),
+      s"expected the doc_id aggregate's shuffle alone:\n$shown")
   }
 
   test("span-sequence equality invariant: validation mutates nothing") {
