@@ -551,8 +551,10 @@ object Compiler {
 
   /** strips one level of optionality, preserving a rename wrapper so a
     * renamed optional keeps its display name on failure
-    * (`optional(...).rename(...)` composes like gentleUpdate clones). */
-  private def peelOptional(c: Contract): Option[Contract] = c match {
+    * (`optional(...).rename(...)` composes like gentleUpdate clones).
+    * The one test of what counts as an optional field, for this compile
+    * and the verdict's ([[graft.functions.VerdictCompiler]]). */
+  private[graft] def peelOptional(c: Contract): Option[Contract] = c match {
     case OptionalC(inner) => Some(inner)
     case Renamed(inner, n) => peelOptional(inner).map(Renamed(_, n))
     case _ => None

@@ -137,9 +137,6 @@ final class ContractRegistry(val module: String) {
   def thisOf(name: String): Option[Contract] =
     entries.get(name).flatMap(_.thisC)
 
-  def isMethodOf(name: String): Boolean =
-    entries.get(name).exists(_.isMethod)
-
   /** declare the contract each EXTRA input beyond the declared window
     * must satisfy (the `extraArgs` analog, function-contracts.js:
     * 161-165) for the most recently registered multi-input member. */

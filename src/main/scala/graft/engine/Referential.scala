@@ -19,7 +19,9 @@ import org.apache.spark.sql.functions._
   * The projection is distinct-ed only for the shuffle strategies, where
   * fewer rows cross the exchange: an anti join only asks whether a key
   * exists, so a broadcast side may repeat keys, and its `distinct`
-  * would cost a shuffle of the whole dimension on every call.
+  * would cost a shuffle of the whole dimension on every call. A
+  * streaming fact with a static dimension runs the same join once per
+  * micro-batch (`StreamingValidate.danglingRefs`).
   */
 object Referential {
 

@@ -297,7 +297,7 @@ object Runner {
           val slice = docs.where(col("part") === k) // partition-pruned scan
           val (n, f) = Manifest.commitPartition(slice,
             xxhash64(col("doc_id"), to_json(col("spans"))),
-            SpanDocs.validateAll(_, slice, media, Some(true)),
+            SpanDocs.validateAll(_, slice, media),
             outDir, snap, k, seq.getAndIncrement(), partFps.get(k))
           ran.incrementAndGet()
           val c = checkedTotal.addAndGet(n)

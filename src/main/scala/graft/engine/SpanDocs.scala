@@ -76,26 +76,20 @@ object SpanDocs {
     * alone (a column-pruned scan and one exchange) and renders its rows
     * from that aggregate; the referential probe explodes only media
     * spans (pruned to spans.media_ref) against the catalog's key
-    * column, broadcast as is under the default `Some(true)`. Beyond
+    * column, always broadcast as is (the media catalog is known-small
+    * by design; `Referential.violations` with `Some(true)`). Beyond
     * the result job, the plan runs one job for the uniqueness exchange
     * and one for the catalog broadcast (a `count()` adds one for its
     * own exchange: 4 jobs on a cached 2,000-doc table). */
-  def validateAll(docs: DataFrame, media: DataFrame,
-                  /** the flagship media catalog is known-small by
-                    * design, so the default forces a broadcast; pass
-                    * None to let AQE size-estimate instead */
-                  broadcastCatalog: Option[Boolean] = Some(true))
-      : DataFrame =
-    validateAll(docs, docs, media, broadcastCatalog)
+  def validateAll(docs: DataFrame, media: DataFrame): DataFrame =
+    validateAll(docs, docs, media)
 
   /** [[validateAll]] with the contract branch reading `checked`, `docs`
     * itself or `docs` under an observation: that branch scans every row
     * once, and observing the pruned uniqueness and referential scans too
     * would count rows twice and stop their column pruning. */
   private[graft] def validateAll(checked: DataFrame, docs: DataFrame,
-                                 media: DataFrame,
-                                 broadcastCatalog: Option[Boolean])
-      : DataFrame = {
+                                 media: DataFrame): DataFrame = {
     val contractViols = violationsFast(checked)
     val uniqViols =
       Uniqueness.violations(docs.select("doc_id"), "doc_id", "docs")
@@ -103,7 +97,7 @@ object SpanDocs {
         explode(col("spans.media_ref")).as("media_ref"))
       .where(col("media_ref").isNotNull)
     val refViols = Referential.violations(refs, "media_ref", media,
-      "media_id", "doc_id", "docs", broadcastCatalog)
+      "media_id", "doc_id", "docs", Some(true))
     contractViols.unionByName(uniqViols).unionByName(refViols)
   }
 

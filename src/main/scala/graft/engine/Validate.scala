@@ -221,17 +221,4 @@ object Validate {
           Compiler.assembleMessage(col("_v")).as("message"))
     }
   }
-
-  /** single-column convenience: validate one column against any contract */
-  def columnViolations(df: DataFrame, colName: String, contract: Contract,
-                       idCol: String, thing: String = "data",
-                       withFullValue: Boolean = false): DataFrame = {
-    val dt = df.schema(colName).dataType
-    implicit val env: MsgEnv = MsgEnv(thing, contract.render,
-      if (withFullValue) Some(Compiler.render(dt, col(colName))) else None)
-    val f = Frame.root.push(lit("." + colName),
-      lit(s"for the field `$colName` of the object"))
-    failing(df, Compiler.firstViol(contract, dt, col(colName), f))
-      .select(violationCols(idCol, contract): _*)
-  }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.serializer.JavaSerializer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, InterpretedProjection, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral, JavaCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, JavaCode}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
@@ -123,10 +123,8 @@ case class ContractCheck(child: Expression, plan: VNode,
   /** recursion entry: inline small nodes, hoist big composite ones. */
   private def emitNode(ctx: CodegenContext, self: String, v: VNode,
                        valueVar: String, isNullCode: String, dt: DataType,
-                       res: String, rootVar: String): String = v match {
-    case _: VNode.AndN | _: VNode.OrN | _: VNode.Obj | _: VNode.Arr |
-         _: VNode.TupArr | _: VNode.TupStruct | _: VNode.MapVals |
-         _: VNode.Opt if v.leaves.size > SplitLeafThreshold =>
+                       res: String, rootVar: String): String =
+    if (v.children.nonEmpty && v.leaves.size > SplitLeafThreshold) {
       val vParam = ctx.freshName("v")
       val nParam = ctx.freshName("vNull")
       val rootParam = ctx.freshName("root")
@@ -144,8 +142,75 @@ case class ContractCheck(child: Expression, plan: VNode,
            |}
          """.stripMargin)
       s"$res = $fnName($valueVar, ($isNullCode), $rootVar);"
-    case _ => emit(ctx, self, v, valueVar, isNullCode, dt, res, rootVar)
+    } else emit(ctx, self, v, valueVar, isNullCode, dt, res, rootVar)
+
+  /** Java assigning `res = <value passes v>` through a fresh local. */
+  private def check(ctx: CodegenContext, self: String, v: VNode,
+                    valueVar: String, isNullCode: String, dt: DataType,
+                    res: String, rootVar: String): String = {
+    val r = ctx.freshName("r")
+    s"""boolean $r;
+       |${emitNode(ctx, self, v, valueVar, isNullCode, dt, r, rootVar)}
+       |$res = $r;""".stripMargin
   }
+
+  /** Java checking slot `idx` of `container` (an ArrayData element or
+    * an InternalRow field) of type `dt` against `v` into `res`.
+    * `nullSettles`: None — a null slot flows into `v` (array elements,
+    * tuple positions, map values); Some(pass) — a null slot settles the
+    * check to `pass` without entering `v` (object fields: required
+    * fail, optional pass). */
+  private def slot(ctx: CodegenContext, self: String, v: VNode,
+                   container: String, idx: String, dt: DataType,
+                   res: String, rootVar: String,
+                   nullSettles: Option[Boolean]): String = {
+    val isNull = ctx.freshName("slotNull")
+    val value = ctx.freshName("slotVal")
+    val jt = CodeGenerator.javaType(dt)
+    val load = s"boolean $isNull = $container.isNullAt($idx);"
+    val get = CodeGenerator.getValue(container, dt, idx)
+    nullSettles match {
+      case None =>
+        s"""$load
+           |$jt $value = $isNull ? ${CodeGenerator.defaultValue(dt)}
+           |  : $get;
+           |${check(ctx, self, v, value, isNull, dt, res, rootVar)}"""
+          .stripMargin
+      case Some(pass) =>
+        val nullCase =
+          if (pass) "/* optional: null passes */" else s"$res = false;"
+        s"""$load
+           |if ($isNull) { $nullCase } else {
+           |  $jt $value =
+           |    $get;
+           |  ${check(ctx, self, v, value, "false", dt, res, rootVar)}
+           |}""".stripMargin
+    }
+  }
+
+  /** `res = start`, then each step in turn while `res` still equals
+    * `start`: the short circuit of and/or, tuple positions and object
+    * fields. */
+  private def chain(res: String, start: Boolean,
+                    steps: Seq[String]): String = {
+    val live = if (start) res else s"!$res"
+    (s"$res = $start;" +: steps.map { step =>
+      s"""
+         |if ($live) {
+         |  $step
+         |}
+       """.stripMargin
+    }).mkString("\n")
+  }
+
+  /** a container check: a null container fails, else `body` */
+  private def nonNull(isNullCode: String, res: String,
+                      body: String): String =
+    s"""
+       |if ($isNullCode) { $res = false; } else {
+       |  $body
+       |}
+     """.stripMargin
 
   /** emit Java assigning `res = <value passes v>`. `valueVar` holds the
     * (possibly primitive) value, `isNullCode` a boolean expression that
@@ -174,19 +239,17 @@ case class ContractCheck(child: Expression, plan: VNode,
          |$res = !(!${ec.isNull} && ${ec.value});
        """.stripMargin
 
-    case f: VNode.Fallback =>
-      val idx = leaves.indexOf(f)
-      val boxed = s"(($isNullCode) ? null : " +
-        s"(Object) ${CodeGenerator.boxedType(dt)}.valueOf($valueVar))"
-      // boxedType.valueOf works for primitives; object types pass as-is
-      val arg =
-        if (CodeGenerator.isPrimitiveType(dt)) boxed
-        else s"(($isNullCode) ? null : (Object) $valueVar)"
-      s"$res = !$self.leafFails($idx, $arg);"
-
-    case rf: VNode.RowFallback =>
-      val idx = leaves.indexOf(rf)
-      s"$res = !$self.leafFails($idx, (Object) $rootVar);"
+    case c: VNode.Cond =>
+      // Fallback over the value (boxed; object types pass as-is), or
+      // RowFallback over the root row
+      val arg = c match {
+        case _: VNode.RowFallback => s"(Object) $rootVar"
+        case _ if CodeGenerator.isPrimitiveType(dt) =>
+          s"(($isNullCode) ? null : " +
+            s"(Object) ${CodeGenerator.boxedType(dt)}.valueOf($valueVar))"
+        case _ => s"(($isNullCode) ? null : (Object) $valueVar)"
+      }
+      s"$res = !$self.leafFails(${leaves.indexOf(c)}, $arg);"
 
     case VNode.Opt(inner) =>
       val innerRes = ctx.freshName("optRes")
@@ -199,185 +262,62 @@ case class ContractCheck(child: Expression, plan: VNode,
          |$res = $innerRes;
        """.stripMargin
 
-    case VNode.AndN(items) =>
-      val parts = items.map { item =>
-        val r = ctx.freshName("andRes")
-        val code = emitNode(ctx, self, item, valueVar, isNullCode, dt, r,
-          rootVar)
-        s"""
-           |if ($res) {
-           |  boolean $r;
-           |  $code
-           |  $res = $r;
-           |}
-         """.stripMargin
-      }
-      s"$res = true;\n${parts.mkString("\n")}"
-
-    case VNode.OrN(items) =>
-      val parts = items.map { item =>
-        val r = ctx.freshName("orRes")
-        val code = emitNode(ctx, self, item, valueVar, isNullCode, dt, r,
-          rootVar)
-        s"""
-           |if (!$res) {
-           |  boolean $r;
-           |  $code
-           |  $res = $r;
-           |}
-         """.stripMargin
-      }
-      s"$res = false;\n${parts.mkString("\n")}"
+    case VNode.AndN(_) | VNode.OrN(_) =>
+      chain(res, start = v.isInstanceOf[VNode.AndN], v.children.map(
+        check(ctx, self, _, valueVar, isNullCode, dt, res, rootVar)))
 
     case VNode.Arr(elem, et) =>
       val arr = ctx.freshName("arr"); val n = ctx.freshName("n")
-      val i = ctx.freshName("i"); val eNull = ctx.freshName("eNull")
-      val eVal = ctx.freshName("eVal"); val er = ctx.freshName("elemRes")
-      val jt = CodeGenerator.javaType(et)
-      s"""
-         |if ($isNullCode) { $res = false; } else {
-         |  ArrayData $arr = $valueVar;
-         |  final int $n = $arr.numElements();
-         |  $res = true;
-         |  for (int $i = 0; $i < $n && $res; $i++) {
-         |    boolean $eNull = $arr.isNullAt($i);
-         |    $jt $eVal = $eNull ? ${CodeGenerator.defaultValue(et)}
-         |      : ${CodeGenerator.getValue(arr, et, i)};
-         |    boolean $er;
-         |    ${emitNode(ctx, self, elem, eVal, eNull, et, er, rootVar)}
-         |    $res = $er;
-         |  }
-         |}
-       """.stripMargin
+      val i = ctx.freshName("i")
+      nonNull(isNullCode, res,
+        s"""ArrayData $arr = $valueVar;
+           |final int $n = $arr.numElements();
+           |$res = true;
+           |for (int $i = 0; $i < $n && $res; $i++) {
+           |  ${slot(ctx, self, elem, arr, i, et, res, rootVar, None)}
+           |}""".stripMargin)
 
     case VNode.TupArr(items, et, strict) =>
       val arr = ctx.freshName("arr"); val n = ctx.freshName("n")
-      val jt = CodeGenerator.javaType(et)
       val strictGate =
         if (strict) s"else if ($n > ${items.size}) { $res = false; }"
         else ""
       val positions = items.zipWithIndex.map { case (item, i) =>
-        val eNull = ctx.freshName("eNull")
-        val eVal = ctx.freshName("eVal"); val er = ctx.freshName("posRes")
-        s"""
-           |if ($res) {
-           |  boolean $eNull = $arr.isNullAt($i);
-           |  $jt $eVal = $eNull ? ${CodeGenerator.defaultValue(et)}
-           |    : ${CodeGenerator.getValue(arr, et, i.toString)};
-           |  boolean $er;
-           |  ${emitNode(ctx, self, item, eVal, eNull, et, er, rootVar)}
-           |  $res = $er;
-           |}
-         """.stripMargin
-      }.mkString("\n")
-      s"""
-         |if ($isNullCode) { $res = false; } else {
-         |  ArrayData $arr = $valueVar;
-         |  final int $n = $arr.numElements();
-         |  if ($n < ${items.size}) { $res = false; }
-         |  $strictGate
-         |  else {
-         |    $res = true;
-         |    $positions
-         |  }
-         |}
-       """.stripMargin
+        slot(ctx, self, item, arr, i.toString, et, res, rootVar, None)
+      }
+      nonNull(isNullCode, res,
+        s"""ArrayData $arr = $valueVar;
+           |final int $n = $arr.numElements();
+           |if ($n < ${items.size}) { $res = false; }
+           |$strictGate
+           |else {
+           |  ${chain(res, start = true, positions)}
+           |}""".stripMargin)
 
     case VNode.TupStruct(items) =>
       val row = ctx.freshName("row")
       val positions = items.zipWithIndex.map { case ((item, fdt), i) =>
-        val eNull = ctx.freshName("posNull")
-        val eVal = ctx.freshName("posVal")
-        val er = ctx.freshName("posRes")
-        val jt = CodeGenerator.javaType(fdt)
-        s"""
-           |if ($res) {
-           |  boolean $eNull = $row.isNullAt($i);
-           |  $jt $eVal = $eNull ? ${CodeGenerator.defaultValue(fdt)}
-           |    : ${CodeGenerator.getValue(row, fdt, i.toString)};
-           |  boolean $er;
-           |  ${emitNode(ctx, self, item, eVal, eNull, fdt, er, rootVar)}
-           |  $res = $er;
-           |}
-         """.stripMargin
-      }.mkString("\n")
-      s"""
-         |if ($isNullCode) { $res = false; } else {
-         |  InternalRow $row = $valueVar;
-         |  $res = true;
-         |  $positions
-         |}
-       """.stripMargin
+        slot(ctx, self, item, row, i.toString, fdt, res, rootVar, None)
+      }
+      nonNull(isNullCode, res, s"InternalRow $row = $valueVar;\n" +
+        chain(res, start = true, positions))
 
     case VNode.Obj(fields) =>
       val row = ctx.freshName("row")
       val checks = fields.map { f =>
-        if (f.ordinal < 0) {
-          // row-scoped (cross-field) field check
-          val fr = ctx.freshName("rowFldRes")
-          s"""
-             |if ($res) {
-             |  boolean $fr;
-             |  ${emitNode(ctx, self, f.inner, valueVar, "false", f.dt, fr,
-                       rootVar)}
-             |  $res = $fr;
-             |}
-           """.stripMargin
-        } else {
-        val fNull = ctx.freshName("fNull")
-        val fVal = ctx.freshName("fVal"); val fr = ctx.freshName("fldRes")
-        val jt = CodeGenerator.javaType(f.dt)
-        val nullCase =
-          if (f.optional) "/* optional: null passes */"
-          else s"$res = false;"
-        s"""
-           |if ($res) {
-           |  boolean $fNull = $row.isNullAt(${f.ordinal});
-           |  if ($fNull) { $nullCase } else {
-           |    $jt $fVal =
-           |      ${CodeGenerator.getValue(row, f.dt, f.ordinal.toString)};
-           |    boolean $fr;
-           |    ${emitNode(ctx, self, f.inner, fVal, "false", f.dt, fr,
-                       rootVar)}
-           |    $res = $fr;
-           |  }
-           |}
-         """.stripMargin
-        }
-      }.mkString("\n")
-      s"""
-         |if ($isNullCode) { $res = false; } else {
-         |  InternalRow $row = $valueVar;
-         |  $res = true;
-         |  $checks
-         |}
-       """.stripMargin
+        if (f.ordinal < 0) // row-scoped (cross-field) field check
+          check(ctx, self, f.inner, valueVar, "false", f.dt, res, rootVar)
+        else slot(ctx, self, f.inner, row, f.ordinal.toString, f.dt, res,
+          rootVar, Some(f.optional))
+      }
+      nonNull(isNullCode, res, s"InternalRow $row = $valueVar;\n" +
+        chain(res, start = true, checks))
 
-    case _: VNode.Field => throw new IllegalStateException(
-      "Field is only reachable through Obj")
+    case _: VNode.Field => sys.error("Field is only reachable through Obj")
 
     case VNode.MapVals(valueNode, vt) =>
-      val m = ctx.freshName("map"); val vals = ctx.freshName("vals")
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val eNull = ctx.freshName("vNull"); val eVal = ctx.freshName("vVal")
-      val er = ctx.freshName("valRes")
-      val jt = CodeGenerator.javaType(vt)
-      s"""
-         |if ($isNullCode) { $res = false; } else {
-         |  MapData $m = $valueVar;
-         |  ArrayData $vals = $m.valueArray();
-         |  final int $n = $vals.numElements();
-         |  $res = true;
-         |  for (int $i = 0; $i < $n && $res; $i++) {
-         |    boolean $eNull = $vals.isNullAt($i);
-         |    $jt $eVal = $eNull ? ${CodeGenerator.defaultValue(vt)}
-         |      : ${CodeGenerator.getValue(vals, vt, i)};
-         |    boolean $er;
-         |    ${emitNode(ctx, self, valueNode, eVal, eNull, vt, er, rootVar)}
-         |    $res = $er;
-         |  }
-         |}
-       """.stripMargin
+      emit(ctx, self, VNode.Arr(valueNode, vt), s"$valueVar.valueArray()",
+        isNullCode, ArrayType(vt), res, rootVar)
   }
 
   override protected def withNewChildInternal(c: Expression): ContractCheck =

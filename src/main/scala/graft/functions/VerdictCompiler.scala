@@ -153,7 +153,8 @@ object VerdictCompiler {
         val extra =
           o.isStrict && st.fieldNames.exists(!o.fields.keySet(_))
         val missingRequired = o.fields.exists { case (fname, fc) =>
-          !st.fieldNames.contains(fname) && !isOptional(fc)
+          !st.fieldNames.contains(fname) &&
+            Compiler.peelOptional(fc).isEmpty
         }
         if (extra || missingRequired) FailAlways
         else Obj(o.fields.toSeq.flatMap { case (fname, fc) =>
@@ -161,11 +162,11 @@ object VerdictCompiler {
           if (ord < 0) None // optional + schema-missing: passes
           else {
             val fdt = st.fields(ord).dataType
-            val opt = isOptional(fc)
+            val peeled = Compiler.peelOptional(fc)
             // a NULL on a required field fails at the Field node, so
             // the field's own contract needs no required gate
-            try Some(Field(ord, fdt, opt,
-              build(if (opt) peel(fc) else fc, fdt)))
+            try Some(Field(ord, fdt, peeled.isDefined,
+              build(peeled.getOrElse(fc), fdt)))
             catch {
               case _: CrossFieldPred if row =>
                 // whole field check (required gate + inner contract)
@@ -205,17 +206,6 @@ object VerdictCompiler {
             case e => Leaf(e)
           }
       }
-  }
-
-  private def peel(c: Contract): Contract = c match {
-    case OptionalC(inner) => inner
-    case Renamed(inner, n) => Renamed(peel(inner), n)
-    case other => other
-  }
-  private def isOptional(c: Contract): Boolean = c match {
-    case _: OptionalC => true
-    case Renamed(inner, _) => isOptional(inner)
-    case _ => false
   }
 
   /** generic first-violation as an interpreted fail condition — the

@@ -1,10 +1,10 @@
 package graft.streaming
 
 import graft.contracts.ObjectC
-import graft.engine.{Drift, Manifest, SpanDocs, Stats, Validate}
+import graft.engine.{Drift, Manifest, Referential, Stats, Validate}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.Row
 
 /** Structured-Streaming adoption of the validation pass (SURVEY.md
@@ -61,36 +61,19 @@ object StreamingValidate {
 
   /** streaming referential check: dangling-FK rows of an unbounded
     * stream against a bounded static dimension (the `media_ref` ∈
-    * media-catalog check of the north rule, in stream form). A
-    * stream-static join is STATELESS — each micro-batch joins the
-    * static side, nothing accumulates in streaming state — so this is
-    * append-mode safe with no watermark. The dimension is key-projected
-    * and distinct-ed before the join and broadcast by default
-    * (known-small catalogs): the stream side never shuffles, the same
-    * plan shape as the batch [[graft.engine.Referential]]. Implemented
-    * as stream-static LEFT OUTER + null-filter, the join type
-    * Structured Streaming guarantees for a stream left side; output
-    * rows equal the batch left-anti. */
+    * media-catalog check of the north rule, in stream form) — the batch
+    * [[graft.engine.Referential.violations]] as is. Its stream-static
+    * LEFT ANTI join is STATELESS (each micro-batch joins the static
+    * side, nothing accumulates in streaming state), so this is
+    * append-mode safe with no watermark. `broadcastDim` (default, for
+    * known-small catalogs) broadcasts the dimension's key projection,
+    * so the stream side never shuffles; `false` forbids the broadcast. */
   def danglingRefs(stream: DataFrame, fkCol: String, dim: DataFrame,
                    pkCol: String, idCol: String,
                    thing: String = "stream",
-                   broadcastDim: Boolean = true): DataFrame = {
-    val keys0 = dim.select(col(pkCol).as(fkCol)).distinct()
-      .withColumn("_present", lit(true))
-    val keys = if (broadcastDim) broadcast(keys0) else keys0
-    stream.where(col(fkCol).isNotNull)
-      .join(keys, Seq(fkCol), "left_outer")
-      .where(col("_present").isNull)
-      .select(
-        col(idCol).cast("string").as("doc_id"),
-        lit("." + fkCol).as("path"),
-        lit(s"`$fkCol` present in catalog").as("expected"),
-        col(fkCol).cast("string").as("got"),
-        lit(s"ref($fkCol -> $pkCol)").as("contract_repr"),
-        concat(lit(s"check on `$thing` failed: Expected `$fkCol` " +
-          s"present in catalog, but got dangling "),
-          col(fkCol).cast("string")).as("message"))
-  }
+                   broadcastDim: Boolean = true): DataFrame =
+    Referential.violations(stream, fkCol, dim, pkCol, idCol, thing,
+      Some(broadcastDim))
 
   /** streaming decontamination: flag arriving docs that share any word
     * n-gram with a STATIC eval corpus. Eval corpora are tiny, so the

@@ -326,6 +326,22 @@ class ContractCheckSpec extends SparkTestBase {
       C.obj("ts" -> C.tuple(C.optional(C.integer), C.string)),
       expectSomeViol = false)
     assertEquivalent(df, C.obj("ts" -> C.tuple(C.integer, C.string)))
+    // the same null flow at array elements, array-tuple positions and
+    // map values; a contract that rejects null fails each container
+    val xs = fix("array(cast(null as int), 1) as xs")
+      .unionByName(fix("array(cast(null as int), 0) as xs"))
+    assertEquivalent(xs, C.obj("xs" -> C.array(C.optional(C.integer))),
+      expectSomeViol = false)
+    assertEquivalent(xs, C.obj("xs" -> C.array(C.falsy)))
+    assertEquivalent(xs, C.obj("xs" -> C.array(C.integer)))
+    assertEquivalent(xs, C.obj("xs" -> C.tuple(C.any, C.integer)),
+      expectSomeViol = false)
+    assertEquivalent(xs, C.obj("xs" -> C.tuple(C.integer, C.integer)))
+    val m = fix("map('k', cast(null as int)) as m")
+    assertEquivalent(m, C.obj("m" -> C.hash(C.any)), expectSomeViol = false)
+    assertEquivalent(m, C.obj("m" -> C.hash(C.optional(C.integer))),
+      expectSomeViol = false)
+    assertEquivalent(m, C.obj("m" -> C.hash(C.integer)))
   }
 
   test("codegen verdict ≡ generic on FailAlways paths (schema gaps)") {
