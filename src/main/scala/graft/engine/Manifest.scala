@@ -1,9 +1,12 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode,
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode,
   SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Partition-granular run manifest — the checkpoint-resume log of
   * BASELINE.json `north_rule` ("resumable from checkpoint with
@@ -14,6 +17,13 @@ import org.apache.spark.sql.internal.SQLConf
   * SURVEY.md §7.4): one row per completed (snapshot, partition), carrying
   * metrics and an input fingerprint. Resume = read log, skip partitions
   * whose (snapshot, partition, fingerprint) already completed.
+  *
+  * Each row is one Parquet file that the driver writes itself, with no
+  * Spark job, the way a table log commits an entry: the file is written
+  * under a hidden temp name and renamed to a unique `part-<uuid>.parquet`
+  * ([[replaceAtomically]]). A killed append leaves at most a hidden file,
+  * which no read lists; appends from concurrent partition workers write
+  * distinct files and need no lock.
   *
   * Crash-safety contract: a partition's outputs are (over)written BEFORE
   * its manifest row is appended, and output writes are per-partition
@@ -30,26 +40,36 @@ object Manifest {
     * it from Parquet footers. Files written before `input_fp` existed
     * read that column as null (those rows resume on snapshot match
     * only). */
-  private val schema = org.apache.spark.sql.types.StructType.fromDDL(
+  private val schema = StructType.fromDDL(
     "snapshot_id STRING, partition_id INT, status STRING, " +
     "n_checked BIGINT, n_failed BIGINT, fingerprint BIGINT, " +
     "seq BIGINT, input_fp STRING")
+
+  /** the Parquet schema of a manifest file, as Spark's writer converted
+    * the rows the append wrote with a Spark job: `binary (STRING)`,
+    * `int32` and `int64`, the strings optional and the numbers
+    * required (they were primitive fields of a tuple) */
+  private val fileSchema = new org.apache.spark.sql.execution.datasources
+    .parquet.SparkToParquetSchemaConverter(new SQLConf).convert(
+      StructType(schema.map(f => f.copy(nullable = f.dataType == StringType))))
 
   val schemaCols: Seq[String] = schema.fieldNames.toSeq
 
   def path(outDir: String): String = s"$outDir/_manifest"
 
-  /** the log's rows, empty when the directory is missing or holds no
-    * data file yet (only `_temporary`, say). Reads the files one listing
-    * found, not the directory: Spark treats a root named `_manifest` as
-    * hidden and logs a WARN on every directory read (a glob read logs
-    * one too, with a stack trace). Past Spark's serial-listing threshold
-    * (32 roots by default) a file list would cost a listing job, so a
-    * log of more files is read as the directory, WARN and all. */
-  def load(spark: SparkSession, outDir: String): DataFrame = {
+  /** the log's data files read with the declared schema; None when the
+    * directory is missing or holds no data file yet (only `_temporary`
+    * or a hidden temp file, say). Reads the files one listing found, not
+    * the directory: Spark treats a root named `_manifest` as hidden and
+    * logs a WARN on every directory read (a glob read logs one too, with
+    * a stack trace). Past Spark's serial-listing threshold (32 roots by
+    * default) a file list would cost a listing job, so a log of more
+    * files is read as the directory, WARN and all. */
+  private def read(spark: SparkSession, outDir: String)
+      : Option[DataFrame] = {
     // listed through the Hadoop FS — outDir may be HDFS/s3a, not just
     // a local path
-    val hp = new org.apache.hadoop.fs.Path(path(outDir))
+    val hp = new Path(path(outDir))
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files =
       try fs.listStatus(hp).toSeq.collect {
@@ -59,12 +79,16 @@ object Manifest {
       catch { case _: java.io.FileNotFoundException => Nil }
     val serialRoots = spark.conf.get(
       SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key).toInt
-    if (files.isEmpty) spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+    if (files.isEmpty) None
     else if (files.size > serialRoots)
-      spark.read.schema(schema).parquet(hp.toString)
-    else spark.read.schema(schema).parquet(files: _*)
+      Some(spark.read.schema(schema).parquet(hp.toString))
+    else Some(spark.read.schema(schema).parquet(files: _*))
   }
+
+  /** the log's rows, empty when it has no data file */
+  def load(spark: SparkSession, outDir: String): DataFrame =
+    read(spark, outDir).getOrElse(spark.createDataFrame(
+      java.util.Collections.emptyList[Row](), schema))
 
   /** what resume needs from the log, read in one pass.
     *  - `completed`: partitions with a `done` row for the snapshot asked
@@ -77,26 +101,54 @@ object Manifest {
                          latestInputFps: Map[Int, String],
                          nextSeq: Long)
 
-  /** one grouped action over the log: the driver receives at most one
-    * row per partition, however many rows resumes have appended. */
+  /** [[State]] of some of the log's rows, before `nextSeq` is derived:
+    * `latest` keeps the `(seq, input_fp)` of each partition's latest
+    * `done` row that has both. Rows fold in, partials merge, in any
+    * order. */
+  private final case class Partial(completed: Set[Int],
+      latest: Map[Int, (Long, String)], maxSeq: Option[Long]) {
+
+    private def later(m: Map[Int, (Long, String)], k: Int,
+                      seqFp: (Long, String)) =
+      if (m.get(k).forall(_._1 < seqFp._1)) m.updated(k, seqFp) else m
+
+    /** a row of (partition_id, status, snapshot_id, seq, input_fp); a
+      * null `seq` or `input_fp` is skipped, as `max`/`max_by` skip it */
+    def add(r: Row, snapshotId: Option[String]): Partial = {
+      val k = if (r.isNullAt(0)) None else Some(r.getInt(0))
+      val done = r.getString(1) == "done"
+      val seq = if (r.isNullAt(3)) None else Some(r.getLong(3))
+      Partial(
+        k.filter(_ => done && snapshotId.contains(r.getString(2)))
+          .fold(completed)(completed + _),
+        (k, seq, Option(r.getString(4))) match {
+          case (Some(p), Some(s), Some(fp)) if done =>
+            later(latest, p, (s, fp))
+          case _ => latest
+        },
+        (maxSeq ++ seq).maxOption)
+    }
+
+    def merge(o: Partial): Partial = Partial(completed ++ o.completed,
+      o.latest.foldLeft(latest) { case (m, (k, sf)) => later(m, k, sf) },
+      (maxSeq ++ o.maxSeq).maxOption)
+  }
+
+  /** one Spark job with no shuffle: each scan task folds its rows into a
+    * [[Partial]], and the driver merges the partials, so it receives at
+    * most one entry per partition per task however many rows resumes
+    * have appended. A log with no data file is decided without a job. */
   def state(spark: SparkSession, outDir: String,
             snapshotId: Option[String]): State = {
-    val done = col("status") === "done"
-    val hasFp = done && col("input_fp").isNotNull
-    val rows = load(spark, outDir).groupBy("partition_id").agg(
-        bool_or(snapshotId.fold(lit(false))(s =>
-          done && col("snapshot_id") === s)).as("done_snap"),
-        max_by(when(hasFp, col("input_fp")), when(hasFp, col("seq")))
-          .as("input_fp"),
-        max(col("seq")).as("max_seq"))
-      .collect()
-    State(
-      rows.filter(r => !r.isNullAt(1) && r.getBoolean(1))
-        .map(_.getInt(0)).toSet,
-      rows.filterNot(_.isNullAt(2))
-        .map(r => r.getInt(0) -> r.getString(2)).toMap,
-      rows.filterNot(_.isNullAt(3)).map(_.getLong(3))
-        .maxOption.fold(0L)(_ + 1L))
+    val empty = Partial(Set.empty, Map.empty, None)
+    val all = read(spark, outDir).fold(empty) { log =>
+      log.select("partition_id", "status", "snapshot_id", "seq", "input_fp")
+        .rdd.mapPartitions(rows =>
+          Iterator.single(rows.foldLeft(empty)(_.add(_, snapshotId))))
+        .collect().foldLeft(empty)(_ merge _)
+    }
+    State(all.completed, all.latest.map { case (k, (_, fp)) => k -> fp },
+      all.maxSeq.fold(0L)(_ + 1L))
   }
 
   /** partitions already completed for this snapshot. */
@@ -152,25 +204,50 @@ object Manifest {
     (nChecked, nFailed)
   }
 
-  /** append one completed-partition row (atomic enough: parquet append
-    * creates a new file; readers take the union). Appends are
-    * serialized under a JVM-wide lock: concurrent partition workers
-    * (Runner) append to the SAME directory, and Hadoop's
-    * FileOutputCommitter stages every job of a path under one shared
-    * `_temporary/0/` — overlapping commits would delete each other's
-    * staging. The lock costs nothing (a manifest row is one tiny file);
-    * the heavy per-partition work stays concurrent. */
-  private val appendLock = new Object
+  /** writes `target` whole or not at all: `write` fills the hidden
+    * sibling `.<name>.tmp`, which is then renamed over `target`
+    * (`Options.Rename.OVERWRITE`). A failed write removes the temp file,
+    * and a killed one leaves only it, so `target` keeps its previous
+    * content either way. */
+  private[graft] def replaceAtomically(target: Path, conf: Configuration)(
+      write: Path => Unit): Unit = {
+    val fs = target.getFileSystem(conf)
+    val dst = fs.makeQualified(target)
+    val tmp = new Path(dst.getParent, s".${dst.getName}.tmp")
+    try {
+      write(tmp)
+      FileContext.getFileContext(dst.toUri, conf)
+        .rename(tmp, dst, Options.Rename.OVERWRITE)
+    } catch { case e: Throwable => fs.delete(tmp, false); throw e }
+  }
+
+  /** append one completed-partition row as a new one-row Parquet file,
+    * written on the driver (no Spark job) with Spark's column names and
+    * physical types; readers take the union of the files. */
   def append(spark: SparkSession, outDir: String, snapshotId: String,
              partitionId: Int, nChecked: Long, nFailed: Long,
              fingerprint: Long, seq: Long,
-             inputFp: Option[String] = None): Unit =
-      appendLock.synchronized {
-    import spark.implicits._
-    Seq((snapshotId, partitionId, "done", nChecked, nFailed, fingerprint,
-      seq, inputFp.orNull))
-      .toDF(schemaCols: _*)
-      .coalesce(1)
-      .write.mode(SaveMode.Append).parquet(path(outDir))
+             inputFp: Option[String] = None): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroup
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val row = new SimpleGroup(fileSchema)
+    Option(snapshotId).foreach(row.add("snapshot_id", _))
+    row.add("partition_id", partitionId)
+    row.add("status", "done")
+    row.add("n_checked", nChecked)
+    row.add("n_failed", nFailed)
+    row.add("fingerprint", fingerprint)
+    row.add("seq", seq)
+    inputFp.foreach(row.add("input_fp", _))
+    val file = new Path(path(outDir),
+      s"part-${java.util.UUID.randomUUID}.parquet")
+    replaceAtomically(file, conf) { tmp =>
+      val w = ExampleParquetWriter
+        .builder(HadoopOutputFile.fromPath(tmp, conf)).withConf(conf)
+        .withType(fileSchema).build()
+      try w.write(row) finally w.close()
+    }
   }
 }

@@ -1,8 +1,11 @@
 package graft.engine
 
 import graft.gen.SpanGen
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** spark-submit-able validation job with checkpoint resume.
   *
@@ -87,7 +90,6 @@ object Runner {
     * fingerprints and the partition set from a single call. */
   private def dataFiles(spark: SparkSession, inputDir: String)
       : Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(s"$inputDir/docs")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -158,6 +160,35 @@ object Runner {
           math.max(1L, nChecked)}%.4f over $nChecked%d docs after " +
         f"$processed%d partitions exceeds maxViolRate=$maxRate%.4f")
 
+  /** `text` as the whole content of `path`, replaced atomically */
+  private def writeUtf8(path: Path, text: String, conf: Configuration)
+      : Unit =
+    Manifest.replaceAtomically(path, conf) { tmp =>
+      val out = tmp.getFileSystem(conf).create(tmp, true)
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
+
+  /** the schema-drift gate: compares `cur` against the schema recorded
+    * at `path` by the last run that validated a partition, throws on
+    * breaking drift unless `allowBreakingDrift`, then records `cur`
+    * (O(schema), runs before any data is touched) */
+  private def recordSchema(path: Path, cur: StructType,
+      allowBreakingDrift: Boolean, conf: Configuration): Unit = {
+    val fs = path.getFileSystem(conf)
+    if (fs.exists(path)) {
+      val in = fs.open(path)
+      val prevJson =
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        finally in.close()
+      val prev = DataType.fromJson(prevJson).asInstanceOf[StructType]
+      val changes = SchemaEvolution.diff(prev, cur)
+      val breaking = changes.filterNot(_.safe)
+      if (breaking.nonEmpty && !allowBreakingDrift)
+        throw SchemaEvolution.SchemaDriftError(breaking, changes)
+    }
+    writeUtf8(path, cur.json, conf)
+  }
+
   /** Validates the pending partitions of `inputDir/docs` into `outDir`
     * and returns (processed, skipped) partition counts.
     *
@@ -180,15 +211,15 @@ object Runner {
     * fingerprints and the partition set (the `part=k` directory names)
     * all derive from that listing; only a layout that is not `part=k`
     * pays a `distinct` scan of the `part` column. The manifest is read
-    * once, with its declared schema, as one grouped action that returns
-    * one row per partition ([[Manifest.state]]), and the media table is
-    * read only when some partition is pending (its schema merge is a
-    * fourth job). A no-op resume runs three jobs: the docs schema merge
-    * and the manifest aggregate's two stages. Because partitions are
-    * named by their directories, a `part=k` directory whose data files
-    * hold zero rows is a partition: it is validated with
-    * `n_checked = 0` and gets a manifest row (`partitionBy` never
-    * writes such a directory).
+    * once, with its declared schema, in one job with no shuffle that
+    * returns at most one entry per partition per scan task
+    * ([[Manifest.state]]). The docs and media tables are read only when
+    * some partition is pending (each schema merge is a job), so a no-op
+    * resume runs one job, the manifest read, and records no schema.
+    * Because partitions are named by their directories, a `part=k`
+    * directory whose data files hold zero rows is a partition: it is
+    * validated with `n_checked = 0` and gets a manifest row
+    * (`partitionBy` never writes such a directory).
     *
     * Per partition, one call of [[Manifest.commitPartition]] (the
     * partition kernel the streaming sink shares) validates the slice
@@ -196,13 +227,14 @@ object Runner {
     * appends its manifest row. Input row count and the content
     * fingerprint are OBSERVED on the contract-validation branch of the
     * violations write (`observe` metrics ride the write job for free).
-    * Measured on `init`'s layout (2000 docs, 4 partitions): the write,
-    * the distinct-failing-docs read-back and the manifest append cost
-    * seven jobs a partition (AQE runs each shuffle and broadcast stage
-    * as its own job); a first run into an empty `outDir` adds two
-    * set-up jobs (9 for one partition, 16 for two), and a resume of two
-    * partitions runs 18 jobs (four set-up jobs: the docs and media
-    * schema merges and the manifest aggregate's two stages).
+    * The manifest row is written by the driver, not by a Spark job.
+    * Measured on `init`'s layout (2000 docs, 4 partitions): the write
+    * and the distinct-failing-docs read-back cost six jobs a partition
+    * (AQE runs each shuffle and broadcast stage as its own job); a first
+    * run into an empty `outDir` adds two set-up jobs, the docs and media
+    * schema merges (8 for one partition, 14 for two), and a resume of
+    * two partitions runs 15 jobs (three set-up jobs: the two schema
+    * merges and the manifest read).
     *
     * Partitions are processed `spark.graft.runner.concurrency`-way
     * concurrently (default 4; an integer >= 1): each is an independent
@@ -219,9 +251,10 @@ object Runner {
     * inputs are read with `mergeSchema`, so a snapshot that ADDED a
     * column reads old files as null and the non-strict contract ignores
     * the extra — additive evolution validates without reconfiguration.
-    * The docs schema of every run is recorded at `outDir/_schema.json`;
-    * when the current snapshot's schema has BREAKING drift vs the last
-    * validated one (removed/retyped fields — see
+    * The docs schema of every run that validates a partition is recorded
+    * at `outDir/_schema.json` (replaced atomically, as is
+    * `_registry.json`); when the current snapshot's schema has BREAKING
+    * drift vs the last validated one (removed/retyped fields — see
     * [[SchemaEvolution.Change.safe]]) the run throws
     * [[SchemaEvolution.SchemaDriftError]] before any partition starts,
     * naming the exact paths. `allowBreakingDrift` overrides the gate
@@ -231,43 +264,22 @@ object Runner {
           format: String = "parquet",
           maxViolRate: Option[Double] = None,
           allowBreakingDrift: Boolean = false): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
     val conc = concurrency(spark)
     val files = dataFiles(spark, inputDir)
     val snap = hashListing(files)
+    val conf = spark.sparkContext.hadoopConfiguration
     // contract catalog rides with the outputs (idempotent overwrite),
     // written through the Hadoop FS so outDir may be any store
-    val regPath = new Path(outDir, "_registry.json")
-    val fs = regPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(regPath, true)
-    try out.write(registry.toManifestJson.getBytes("UTF-8"))
-    finally out.close()
+    writeUtf8(new Path(outDir, "_registry.json"), registry.toManifestJson,
+      conf)
     // mergeSchema: evolved snapshots whose newer files carry added
     // columns read as the union schema (old files -> null), the
     // add-column evolution Iceberg guarantees; parquet/orc honor the
-    // option, other sources ignore it harmlessly
-    val docs = spark.read.option("mergeSchema", "true")
+    // option, other sources ignore it harmlessly. Read only when some
+    // partition is pending or the layout is not `part=k` (its schema
+    // merge is a job)
+    lazy val docs = spark.read.option("mergeSchema", "true")
       .format(format).load(s"$inputDir/docs")
-    // schema-drift gate: compare against the last validated snapshot's
-    // recorded schema and fail fast on breaking drift (O(schema), runs
-    // before any data is touched)
-    val schemaPath = new Path(outDir, "_schema.json")
-    val curSchema = docs.drop("part").schema
-    if (fs.exists(schemaPath)) {
-      val in = fs.open(schemaPath)
-      val prevJson =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val prev = org.apache.spark.sql.types.DataType.fromJson(prevJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      val changes = SchemaEvolution.diff(prev, curSchema)
-      val breaking = changes.filterNot(_.safe)
-      if (breaking.nonEmpty && !allowBreakingDrift)
-        throw SchemaEvolution.SchemaDriftError(breaking, changes)
-    }
-    val sOut = fs.create(schemaPath, true)
-    try sOut.write(curSchema.json.getBytes("UTF-8"))
-    finally sOut.close()
     val partFps = partitionFps(files)
     val parts =
       if (partFps.nonEmpty) partFps.keys.toArray.sorted
@@ -277,6 +289,9 @@ object Runner {
       .exists(fp => partFps.get(k).contains(fp))).toSet
     val done = manifest.completed ++ doneFp
     val pending = parts.filterNot(done).take(maxParts)
+    if (pending.nonEmpty)
+      recordSchema(new Path(outDir, "_schema.json"), docs.drop("part").schema,
+        allowBreakingDrift, conf)
     // read only when there is work (its schema merge is a job). Not
     // cached: each partition's broadcast reads only `media_id`, and a
     // cache costs a materialization job per concurrent partition

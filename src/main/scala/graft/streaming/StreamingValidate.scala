@@ -37,10 +37,10 @@ object StreamingValidate {
     * `outDir/violations/part=<batchId>`, append a manifest row, all
     * through [[graft.engine.Manifest.commitPartition]]. `n_checked` is
     * observed on the violations write, so the batch is not recomputed
-    * to count it (five jobs for a small steady-state batch); the
-    * fingerprint column is 0. The completed set is read once, on the
-    * sink's first batch, then kept current with the batches the sink
-    * logs. */
+    * to count it (four jobs for a small steady-state batch; the
+    * manifest row is a driver write); the fingerprint column is 0. The
+    * completed set is read once, on the sink's first batch, then kept
+    * current with the batches the sink logs. */
   def foreachBatchSink(stream: DataFrame, contract: ObjectC,
                        idCol: String, outDir: String, snapshotId: String)
       : DataStreamWriter[Row] = {

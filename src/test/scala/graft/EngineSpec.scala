@@ -434,13 +434,14 @@ class EngineSpec extends SparkTestBase {
     assert(Runner.run(spark, s"$tmp/in", s"$tmp/out") == (4, 0))
     val (r, jobs) = jobsOf(Runner.run(spark, s"$tmp/in", s"$tmp/out"))
     assert(r == (0, 4))
-    // 3: the docs schema merge and the manifest aggregate's two stages
-    // (a set-up with three manifest reads and a distinct scan ran 13)
+    // 1: the manifest read (a set-up with three manifest reads and a
+    // distinct scan ran 13; the docs schema merge and a two-stage
+    // manifest aggregate ran 3)
     info(s"no-op resume ran $jobs jobs")
-    assert(jobs <= 4, s"no-op resume ran $jobs jobs")
+    assert(jobs <= 1, s"no-op resume ran $jobs jobs")
   }
 
-  test("per partition: at most seven Spark jobs; manifest counts equal " +
+  test("per partition: at most six Spark jobs; manifest counts equal " +
        "a direct count and validateAll of the slice") {
     val tmp = Files.createTempDirectory("graft-kernel").toString
     Runner.init(spark, s"$tmp/in", 2000, 4)
@@ -450,10 +451,11 @@ class EngineSpec extends SparkTestBase {
     val (r, two) = jobsOf(Runner.run(spark, s"$tmp/in", s"$tmp/two", 2))
     assert(r == (2, 0))
     info(s"runs of 1 and 2 partitions: $one and $two jobs")
-    // 7: the write's uniqueness shuffle and catalog broadcast stages,
-    // the write, the two-job read-back and the manifest append (9 while
-    // uniqueness joined back onto the slice)
-    assert(two - one <= 7, s"per-partition jobs: ${two - one}")
+    // 6: the write's uniqueness shuffle and catalog broadcast stages,
+    // the write and the two-job read-back; the driver writes the
+    // manifest row (7 while a Spark job appended it, 9 while uniqueness
+    // joined back onto the slice)
+    assert(two - one <= 6, s"per-partition jobs: ${two - one}")
     val docs = spark.read.parquet(s"$tmp/in/docs")
     val media = spark.read.parquet(s"$tmp/in/media")
     val rows = Manifest.load(spark, s"$tmp/two").collect()
@@ -606,7 +608,8 @@ class EngineSpec extends SparkTestBase {
       ("c", 3, "done", 4L, "f3"),
       ("c", 3, "done", 6L, null))) // a null fp does not hide f3
     writeManifest(out, withFp = true, Seq(("b", 4, "done", 5L, "f4")))
-    val m = Manifest.load(spark, out)
+    // re-listed on each use, so the definitions see every file written
+    def m = Manifest.load(spark, out)
     def completedDef(snap: String): Set[Int] =
       m.where(col("snapshot_id") === snap && col("status") === "done")
         .select("partition_id").distinct()
@@ -625,6 +628,33 @@ class EngineSpec extends SparkTestBase {
     assert(Manifest.nextSeq(spark, out) == seqDef && seqDef == 10L)
     assert(Manifest.state(spark, out, Some("b")) ==
       Manifest.State(completedDef("b"), fpsDef, seqDef))
+
+    // the fold read by one scan task and by several: each file of the
+    // log is its own task once a file's open cost fills a split, so the
+    // partials merge on the driver. A fourth file holds a later fp for
+    // partition 3 and an older one for partition 2 than the others do
+    writeManifest(out, withFp = true,
+      Seq(("d", 3, "done", 10L, "f3d"), ("d", 2, "done", 1L, "f2old")))
+    def tasksAndStates(conf: (String, String)*)
+        : (Int, Seq[Manifest.State]) = {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try (Manifest.load(spark, out).rdd.getNumPartitions,
+        Seq("a", "b", "c", "d", "z").map(s => Manifest.state(spark, out,
+          Some(s))))
+      finally conf.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    val (oneTask, single) = tasksAndStates(
+      "spark.sql.files.openCostInBytes" -> "0",
+      "spark.sql.files.minPartitionNum" -> "1")
+    val (tasks, several) = tasksAndStates(
+      "spark.sql.files.maxPartitionBytes" -> "64k",
+      "spark.sql.files.openCostInBytes" -> "64k")
+    assert(oneTask == 1 && tasks == 4, s"$oneTask and $tasks tasks")
+    assert(several == single)
+    assert(single.map(_.completed) ==
+      Seq("a", "b", "c", "d", "z").map(completedDef))
+    assert(single.head.latestInputFps ==
+      Map(2 -> "f2b", 3 -> "f3d", 4 -> "f4") && single.head.nextSeq == 11L)
   }
 
   test("a manifest directory that holds only _temporary loads empty") {
@@ -638,6 +668,120 @@ class EngineSpec extends SparkTestBase {
     assert(m.count() == 0)
     assert(Manifest.state(spark, out, Some("a")) ==
       Manifest.State(Set.empty, Map.empty, 0L))
+  }
+
+  test("a hidden temp file in the manifest directory is ignored by load " +
+       "and state") {
+    val out = Files.createTempDirectory("graft-mhidden").toString
+    def plant(): Unit = Files.write(java.nio.file.Paths.get(
+        Manifest.path(out), s".part-${java.util.UUID.randomUUID}.parquet.tmp"),
+      Array[Byte](1, 2, 3)) // what a killed append leaves: not parquet
+    Files.createDirectories(java.nio.file.Paths.get(Manifest.path(out)))
+    plant()
+    assert(Manifest.load(spark, out).count() == 0)
+    assert(Manifest.state(spark, out, Some("s")) ==
+      Manifest.State(Set.empty, Map.empty, 0L))
+    Manifest.append(spark, out, "s", 0, 5L, 1L, 0L, 0L, Some("f0"))
+    plant()
+    assert(Manifest.load(spark, out).count() == 1)
+    assert(Manifest.state(spark, out, Some("s")) ==
+      Manifest.State(Set(0), Map(0 -> "f0"), 1L))
+  }
+
+  test("a driver-appended manifest file reads with the column names and " +
+       "types of a Spark-written one, alone and in a mixed log") {
+    val out = Files.createTempDirectory("graft-mformat").toString
+    writeManifest(out, withFp = true, Seq(("s", 0, "done", 0L, "f0")))
+    def files(): Set[String] = Files.list(java.nio.file.Paths.get(
+        Manifest.path(out))).toArray.map(_.toString)
+      .filter(f => f.endsWith(".parquet") && !f.contains("/.")).toSet
+    val sparkFile = files().head
+    Manifest.append(spark, out, "s", 1, 10L, 1L, 0L, 1L, Some("f1"))
+    Manifest.append(spark, out, "s", 2, 10L, 0L, 0L, 2L)
+    val driverFiles = files() - sparkFile
+    assert(driverFiles.size == 2 &&
+      driverFiles.forall(_.matches(".*/part-[0-9a-f-]{36}\\.parquet")))
+    // the Parquet schema in each footer: names, physical types,
+    // annotations and repetition
+    def footer(f: String) = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f),
+          spark.sparkContext.hadoopConfiguration))
+      try r.getFileMetaData.getSchema finally r.close()
+    }
+    for (f <- driverFiles) {
+      assert(footer(f) == footer(sparkFile), f)
+      assert(spark.read.parquet(f).schema ==
+        spark.read.parquet(sparkFile).schema, f)
+    }
+    def typed(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => f.name -> f.dataType)
+    val want = typed(spark.read.parquet(sparkFile))
+    assert(want.map(_._1) == Manifest.schemaCols)
+    assert(typed(Manifest.load(spark, out)) == want)
+    val rows = Manifest.load(spark, out).collect()
+      .map(r => r.getAs[Int]("partition_id") -> r).toMap
+    assert(rows(1).toSeq == Seq("s", 1, "done", 10L, 1L, 0L, 1L, "f1"))
+    assert(rows(2).toSeq == Seq("s", 2, "done", 10L, 0L, 0L, 2L, null))
+    assert(Manifest.state(spark, out, Some("s")) ==
+      Manifest.State(Set(0, 1, 2), Map(0 -> "f0", 1 -> "f1"), 3L))
+  }
+
+  test("Manifest.append from 16 threads at once: 16 rows, nextSeq past " +
+       "them, no temp file left") {
+    val out = Files.createTempDirectory("graft-mconc").toString
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    try {
+      val appends = (0 until 16).map { k =>
+        pool.submit(new Runnable {
+          def run(): Unit = {
+            go.await()
+            Manifest.append(spark, out, "s", k, 1L, 0L, 0L, k.toLong,
+              Some(s"f$k"))
+          }
+        })
+      }
+      go.countDown()
+      appends.foreach(_.get())
+    } finally pool.shutdown()
+    assert(Manifest.load(spark, out).count() == 16)
+    assert(Manifest.state(spark, out, Some("s")) == Manifest.State(
+      (0 until 16).toSet, (0 until 16).map(k => k -> s"f$k").toMap, 16L))
+    val names = Files.list(java.nio.file.Paths.get(Manifest.path(out)))
+      .toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+    assert(!names.exists(_.endsWith(".tmp")), names.mkString(", "))
+  }
+
+  test("_schema.json is replaced atomically: a write that throws keeps " +
+       "the previous file and leaves no visible file") {
+    val tmp = Files.createTempDirectory("graft-atomic").toString
+    Runner.init(spark, s"$tmp/in", 500, 2)
+    assert(Runner.run(spark, s"$tmp/in", s"$tmp/out") == (2, 0))
+    val dir = java.nio.file.Paths.get(s"$tmp/out")
+    val schemaFile = dir.resolve("_schema.json")
+    val before = Files.readAllBytes(schemaFile)
+    def listing(): Set[String] = Files.list(dir).toArray
+      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).toSet
+    val visible = listing().filterNot(_.startsWith("."))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val err = intercept[IllegalStateException] {
+      Manifest.replaceAtomically(
+          new org.apache.hadoop.fs.Path(schemaFile.toString), conf) { t =>
+        val o = t.getFileSystem(conf).create(t, true)
+        try o.write("{\"type\":\"str".getBytes("UTF-8")) finally o.close()
+        throw new IllegalStateException("killed mid-write")
+      }
+    }
+    assert(err.getMessage == "killed mid-write")
+    assert(java.util.Arrays.equals(Files.readAllBytes(schemaFile), before))
+    assert(listing().filterNot(_.startsWith(".")) == visible)
+    assert(!listing().exists(_.contains(".tmp")), listing())
+    // what the next run's drift gate parses is the schema recorded
+    assert(org.apache.spark.sql.types.DataType.fromJson(
+      new String(before, "UTF-8")) ==
+      spark.read.parquet(s"$tmp/in/docs").drop("part").schema)
   }
 
   test("a manifest of more files than Spark lists serially reads in as " +

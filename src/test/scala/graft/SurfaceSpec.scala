@@ -900,7 +900,7 @@ class SurfaceSpec extends SparkTestBase {
   }
 
   test("streaming: foreachBatch sink observes n_checked; a steady-state " +
-       "micro-batch runs at most five jobs") {
+       "micro-batch runs at most four jobs") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val tmp = java.nio.file.Files.createTempDirectory("graft-sko").toString
     implicit val sq = spark.sqlContext
@@ -936,7 +936,9 @@ class SurfaceSpec extends SparkTestBase {
     }
     val n = batches.indices.map(b => jobs.getOrDefault(b.toLong, 0).intValue)
     info(s"jobs per batch: $n")
-    assert(n.drop(1).forall(_ <= 5), s"jobs per batch: $n")
+    // 4: the violations write and the `n_failed` read-back; the driver
+    // writes the manifest row (5 while a Spark job appended it)
+    assert(n.drop(1).forall(_ <= 4), s"jobs per batch: $n")
     val logged = Manifest.load(spark, tmp).collect()
       .map(r => r.getAs[Int]("partition_id") ->
         (r.getAs[Long]("n_checked"), r.getAs[Long]("n_failed"))).toMap
